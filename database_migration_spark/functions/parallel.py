@@ -16,182 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 
-# (applicationId, analyzed-plan semanticHash, target) -> bool (fan or not).
-# The plan→RDD partition-count probe below costs ~0.15 s of pure driver
-# planning per call (analysis + physical plan + RDD DAG); the decision is
-# a deterministic function of the logical plan and the target, so repeat
-# builds (bench laps, shared sub-relations) reuse it for ~3 py4j calls
-# (r12 opt round, guide §5 — driver work is query time). A hash collision
-# could only mis-route the PERFORMANCE decision, never results; keyed on
-# applicationId so a fresh session never inherits stale decisions.
-_FAN_DECISION: dict[tuple[str, int, int], bool] = {}
-
-
-# (applicationId, md5(canonicalized analyzed plan + input files + output
-# names)) -> row count. Same driver-work memoization family as
-# _FAN_DECISION (r12 opt round, guide §5): parameter-sizing counts
-# (broadcast-vs-shuffle caps, derived LSH bits) re-run an identical job on
-# identical immutable inputs every bench lap / shared sub-plan build. The
-# key is the CANONICALIZED plan text (exprIds normalized) hashed with md5
-# — not the 32-bit semanticHash alone — because some memoized values size
-# result-affecting parameters (LSH bits): a cryptographic-hash collision
-# is the only wrong-result path, vs. a real 0.3 s job per build. Keyed on
-# applicationId so a fresh session (fresh data) never inherits a stale
-# count. The key ALSO folds in df.inputFiles(): canonicalized toString
-# elides file LOCATIONS (verified — two parquet reads of different paths
-# with one schema render the identical "Relation [...] parquet" line), so
-# plan text alone would cross-contaminate multi-corpus sessions
-# (scale_probe's x10/x100 legs). Driver-local literal relations have no
-# input files AND no data in the plan text — they stay un-keyable, which
-# is why every caller-facing memo flag defaults OFF and documents
-# file-backed inputs only.
-_COUNT_MEMO: dict[tuple[str, str], int] = {}
-
-
-def _plan_key(df: DataFrame) -> tuple[str, str]:
-    """(applicationId, md5(canonical plan + sorted input files + output
-    names)) — the one key the memo family shares. Raises whatever py4j
-    raises; callers fall back to the live job."""
-    import hashlib
-
-    sc = df.sparkSession.sparkContext
-    files = sorted(df.inputFiles())
-    if not files:
-        # No file-backed source anywhere in the plan means the data lives
-        # driver-side (createDataFrame literals, spark.range) — invisible
-        # to BOTH the canonical text and the file list, so two different
-        # datasets would share a key. Refuse; callers catch and fall back
-        # to the live job (review finding, r12 session 6).
-        raise ValueError("memo keys require file-backed inputs")
-    plan_text = df._jdf.queryExecution().analyzed().canonicalized().toString()
-    if (
-        "LocalRelation" in plan_text
-        or "LogicalRDD" in plan_text
-        or "ExternalRDD" in plan_text
-    ):
-        # A MIXED plan — file scan joined/unioned with a driver-local
-        # literal relation — passes the inputFiles check above while the
-        # literal leaf still canonicalizes WITHOUT its data (verified:
-        # two joins differing only in literal rows render one plan text),
-        # so two different datasets would share a key (r12 advisor
-        # finding). Refuse on any driver-local leaf in the text; a false
-        # hit (a string literal containing the node name) merely skips
-        # memoization, which is always safe.
-        raise ValueError(
-            "memo keys require fully file-backed plans "
-            "(driver-local leaf in plan)"
-        )
-    canon = (
-        plan_text
-        + "\x00" + "\n".join(files)
-        + "\x00" + "\x00".join(df.columns)
-    )
-    return (sc.applicationId, hashlib.md5(canon.encode()).hexdigest())
-
-
-def clear_build_memos() -> None:
-    """Drop every build-scalar memo (count/row/collect/fan-decision) —
-    the r13 cold-truth hook for measurement harnesses (bench.py,
-    scripts/time_query.py, scale_probe's cold probes): clearing before
-    each lap makes min-of-laps pay the parameter-sizing probe jobs a
-    cold driver pays. Lives HERE, next to the dicts, so a future memo
-    added to this module joins the cold-truth clear in one place instead
-    of silently staying warm in whichever harness wasn't updated.
-    ``queries._TABLE_CACHE`` is deliberately not cleared — the lazy
-    reader memo is a catalog-table equivalent, not a build scalar."""
-    _COUNT_MEMO.clear()
-    _ROW_MEMO.clear()
-    _COLLECT_MEMO.clear()
-    _FAN_DECISION.clear()
-
-
-def memo_count(df: DataFrame) -> int:
-    """``df.count()`` memoized per (session, canonicalized plan + input
-    files) — for build-time parameter sizing over immutable inputs only.
-    Never use it on mutable stores (published targets, streaming state):
-    the memo deliberately assumes a plan re-counts to the same value
-    within one application."""
-    try:
-        key = _plan_key(df)
-    except Exception:  # noqa: BLE001 — memoization is best-effort
-        return df.count()
-    n = _COUNT_MEMO.get(key)
-    if n is None:
-        n = df.count()
-        _COUNT_MEMO[key] = n
-    return n
-
-
-# (applicationId, md5(canonicalized analyzed plan)) -> first collected Row.
-# Same contract and caveats as _COUNT_MEMO: build-time parameter sizing
-# over IMMUTABLE inputs only (histogram bounds, min/max probes) — never
-# mutable stores.
-_ROW_MEMO: dict[tuple[str, str], object] = {}
-
-
-_COLLECT_MEMO: dict[tuple[str, str], list] = {}
-
-
-def memo_collect(df: DataFrame):
-    """``df.collect()`` memoized per (session, canonicalized plan, output
-    field names) — for BOUNDED build-time probes (validation guards,
-    limit(1) existence checks) over immutable inputs. The memo_count rule
-    applies verbatim, plus the sharper caveat that holds for this whole
-    family: the key is the canonicalized PLAN TEXT, and driver-local
-    literal relations (createDataFrame) canonicalize WITHOUT their data
-    (verified: two different literal rows render the identical
-    ``LogicalRDD`` string) — so only relations whose data is reachable
-    through the plan (file scans and derivations thereof) may be
-    memoized. Callers expose this behind default-OFF flags for exactly
-    that reason."""
-    try:
-        key = _plan_key(df)
-    except Exception:  # noqa: BLE001 — memoization is best-effort
-        return df.collect()
-    rows = _COLLECT_MEMO.get(key)
-    if rows is None:
-        rows = df.collect()
-        _COLLECT_MEMO[key] = rows
-    # a COPY per caller: an in-place mutation (sort, pop) on the returned
-    # list must never corrupt the cache entry (review finding)
-    return list(rows)
-
-
-def maybe_memo_collect(df: DataFrame, memo: bool):
-    """The one gate the default-OFF memo flags share: ``memo=True`` routes
-    through :func:`memo_collect` (file-backed immutable inputs only),
-    ``memo=False`` is the live job."""
-    return memo_collect(df) if memo else df.collect()
-
-
-def maybe_memo_first_row(df: DataFrame, memo: bool):
-    """:func:`memo_first_row` behind the same gate (a global aggregate
-    always yields exactly one row, so ``collect()[0]`` is total)."""
-    if memo:
-        return memo_first_row(df)
-    return df.collect()[0]
-
-
-def memo_first_row(df: DataFrame):
-    """``df.collect()[0]`` memoized per (session, canonicalized plan,
-    output field names) — for 1-row build-time parameter aggregates
-    (e.g. per-column min/max histogram bounds) over immutable inputs.
-    The r12 memo_count rule applies verbatim: within one application the
-    same plan over the same immutable data collects the same row;
-    mutable stores must not use this. The field names are part of the
-    key because canonicalization erases aliases while the cached Row is
-    accessed BY NAME — two canonically-equal plans with different
-    aliases must not share an entry (review finding)."""
-    try:
-        key = _plan_key(df)
-    except Exception:  # noqa: BLE001 — memoization is best-effort
-        return df.collect()[0]
-    row = _ROW_MEMO.get(key)
-    if row is None:
-        row = df.collect()[0]
-        _ROW_MEMO[key] = row
-    return row
-
 
 def fan_out(
     df: DataFrame,
@@ -238,25 +62,8 @@ def fan_out(
     single-row-group fixture shape, which the partition-count probe
     still catches. SCALE.md `pk_fan_x100`.)
     """
-    sc = df.sparkSession.sparkContext
-    target = n or sc.defaultParallelism
-    cache_key = None
-    try:
-        cache_key = (
-            sc.applicationId,
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-            target,
-            min_bytes,
-        )
-    except Exception:  # noqa: BLE001 — memoization is best-effort
-        pass
-    if cache_key is not None and cache_key in _FAN_DECISION:
-        fan = _FAN_DECISION[cache_key]
-    else:
-        fan = _should_fan(df, target, min_bytes)
-        if cache_key is not None:
-            _FAN_DECISION[cache_key] = fan
-    if not fan:
+    target = n or df.sparkSession.sparkContext.defaultParallelism
+    if not _should_fan(df, target, min_bytes):
         return df
     if key is not None:
         cols = key if isinstance(key, list) else [key]
@@ -265,7 +72,7 @@ def fan_out(
 
 
 def _should_fan(df: DataFrame, target: int, min_bytes: int = 0) -> bool:
-    """The (uncached) fan decision — see :func:`fan_out`'s docstring."""
+    """The fan decision — see :func:`fan_out`'s docstring."""
     max_pb = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
     # sources without statistics (JDBC relations) report
     # spark.sql.defaultSizeInBytes = Long.MaxValue — that is "unknown",

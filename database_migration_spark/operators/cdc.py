@@ -40,7 +40,6 @@ def net_changes(
     seq_col: str = "seq",
     op_col: str = "op",
     validate_unique: bool = True,
-    memo_guards: bool = False,
 ) -> DataFrame:
     """Per-key net effect of an op-coded stream: exactly one row per key —
     the event with the highest ``seq_col`` (its op + attribute columns).
@@ -48,36 +47,27 @@ def net_changes(
     The window partitions by key over the delta-sized stream only. Ops
     outside I/U/D raise; duplicate (key, seq) pairs raise under
     ``validate_unique`` (one aggregate over the stream).
-    ``memo_guards=True`` caches both guard probes per (session,
-    canonicalized plan) — ONLY for immutable file-backed streams (bench
-    fixtures re-validating the same plan every lap): a real CDC feed is
-    new data per batch, and driver-local literal relations canonicalize
-    without their data (parallel.memo_collect). Violations still raise on
-    the first (live) probe either way.
     """
-    from database_migration_spark.functions.parallel import maybe_memo_collect
-
     # the NULL disjunct is load-bearing: ~isin() is NULL (not true) for a
     # NULL op, which would slip past the guard and then act as a DELETE
     # downstream (op != 'D' is NULL → excluded from upserts while the key
     # still anti-joins out of the base) — review finding, r12 session 6
-    bad = maybe_memo_collect(
-        stream.where(
-            F.col(op_col).isNull() | ~F.col(op_col).isin(*OPS)
-        ).limit(1),
-        memo_guards,
+    bad = (
+        stream.where(F.col(op_col).isNull() | ~F.col(op_col).isin(*OPS))
+        .limit(1)
+        .collect()
     )
     if bad:
         raise ValueError(
             f"unknown CDC op {bad[0][op_col]!r} — expected one of {OPS}"
         )
     if validate_unique:
-        dup = maybe_memo_collect(
+        dup = (
             stream.groupBy(*keys, seq_col)
             .count()
             .where(F.col("count") > 1)
-            .limit(1),
-            memo_guards,
+            .limit(1)
+            .collect()
         )
         if dup:
             kv = {k: dup[0][k] for k in keys}
@@ -102,11 +92,8 @@ def apply_cdc(
     op_col: str = "op",
     validate_unique: bool = True,
     persist: bool = True,
-    memo_guards: bool = False,
 ) -> DataFrame:
     """The new table version after applying the stream's net changes.
-    ``memo_guards`` follows the :func:`net_changes` memo contract
-    (immutable file-backed streams only).
 
     Column contract: the result has exactly the base's columns. Stream
     attribute columns are matched to base columns by name; stream columns
@@ -136,8 +123,7 @@ def apply_cdc(
             f"stream lacks base attribute column(s) {missing} — a CDC feed "
             "must carry the full row image for I/U events"
         )
-    net = net_changes(stream, keys, seq_col, op_col, validate_unique,
-                      memo_guards=memo_guards)
+    net = net_changes(stream, keys, seq_col, op_col, validate_unique)
     if persist:
         from pyspark import StorageLevel
 

@@ -1274,14 +1274,14 @@ def write_fingerprint_index(
 def _write_index_meta(
     path: str, num_perm: int, bands: int, buckets: int, extra: dict | None = None
 ) -> None:
-    import json
     import os
+
+    from database_migration_spark.functions.io import write_json_atomic
 
     os.makedirs(path, exist_ok=True)
     meta = {"num_perm": num_perm, "bands": bands, "buckets": buckets}
     meta.update(extra or {})
-    with open(os.path.join(path, "_index_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_json_atomic(os.path.join(path, "_index_meta.json"), meta)
 
 
 def read_index_meta(path: str) -> dict | None:
@@ -1478,16 +1478,16 @@ def write_hamming_index(
     ``max_hamming`` reads different chunk offsets and silently misses
     every duplicate). ``extra`` records signature provenance (the CLI
     stores the payload hash kind there)."""
-    import json
     import os
+
+    from database_migration_spark.functions.io import write_json_atomic
 
     _write_hamming_index(sigs, path, bits, max_hamming, buckets, "overwrite")
     os.makedirs(path, exist_ok=True)
     meta = {"kind": "hamming", "bits": bits, "max_hamming": max_hamming,
             "buckets": buckets}
     meta.update(extra or {})
-    with open(os.path.join(path, "_index_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_json_atomic(os.path.join(path, "_index_meta.json"), meta)
 
 
 def _write_hamming_index(

@@ -47,17 +47,10 @@ class SyncPlan:
     statements: tuple[str, ...]  # human-reviewable preview (dry-run UX)
 
 
-def watermark(target: DataFrame, delta_col: str, memo: bool = False):
+def watermark(target: DataFrame, delta_col: str):
     """max(delta_col) on the target — one agg, map-side combined
-    (delta_import:256-275). ``memo=True`` caches the scalar per (session,
-    canonicalized plan) — ONLY for immutable file-backed targets (bench
-    fixtures): a real sync target mutates between runs and a stale
-    watermark silently drops deltas, and driver-local literal relations
-    canonicalize without their data (see parallel.memo_collect). Default
-    stays the live job."""
-    from database_migration_spark.functions.parallel import maybe_memo_first_row
-
-    return maybe_memo_first_row(target.agg(F.max(delta_col).alias("wm")), memo)["wm"]
+    (delta_import:256-275)."""
+    return target.agg(F.max(delta_col).alias("wm")).collect()[0]["wm"]
 
 
 def format_watermark_literal(value, value_type: str, dialect: str) -> str:
@@ -135,7 +128,6 @@ def plan_sync(
     delta_col: str | None,
     source_dialect: str | None = None,
     delta_col_type: str = "TIMESTAMP",
-    memo_watermark: bool = False,
 ) -> SyncPlan:
     """Decide the strategy and produce the reviewable plan (dry-run mode —
     delta_import:439-463 returns exactly such a preview table).
@@ -145,11 +137,7 @@ def plan_sync(
     filter the reference pushes into the source's WHERE clause; otherwise a
     neutral quoted literal.
     """
-    wm = (
-        watermark(target, delta_col, memo=memo_watermark)
-        if delta_col and keys
-        else None
-    )
+    wm = watermark(target, delta_col) if delta_col and keys else None
     strat = decide_strategy(keys, delta_col, wm)
     stmts: list[str]
     if strat is SyncStrategy.TRUNCATE_FULL_LOAD:
@@ -181,13 +169,9 @@ def execute_sync(
     target: DataFrame,
     keys: tuple[str, ...] | None,
     delta_col: str | None,
-    memo_watermark: bool = False,
 ) -> DataFrame:
-    """Run the decided strategy, returning the new target content.
-    ``memo_watermark`` follows the :func:`watermark` memo contract
-    (immutable file-backed targets only)."""
-    plan = plan_sync(source, target, keys, delta_col,
-                     memo_watermark=memo_watermark)
+    """Run the decided strategy, returning the new target content."""
+    plan = plan_sync(source, target, keys, delta_col)
     return apply_sync_plan(source, target, plan)
 
 

@@ -131,23 +131,17 @@ def zorder_interleave_sql(cell_exprs: list, bits: int) -> str:
     return "(" + " | ".join(terms) + ")"
 
 
-def column_bounds(df: DataFrame, cols: list, memo: bool = False) -> dict:
+def column_bounds(df: DataFrame, cols: list) -> dict:
     """Driver-bounded (2 longs per column) min/max aggregate for the
     quantizer. Raises on an all-NULL column: bounds of nothing are not a
-    layout, and a silent (0, 0) would fold every row into one cell.
-    ``memo=True`` caches the bounds row per (session, canonicalized plan)
-    — ONLY for immutable file-backed inputs (bench fixtures): layout
-    writers quantize mutable stores, and driver-local literal relations
-    canonicalize without their data (parallel.memo_collect)."""
+    layout, and a silent (0, 0) would fold every row into one cell."""
     aggs = []
     for c in cols:
         aggs += [
             F.min(F.col(c).cast("long")).alias(f"_lo_{c}"),
             F.max(F.col(c).cast("long")).alias(f"_hi_{c}"),
         ]
-    from database_migration_spark.functions.parallel import maybe_memo_first_row
-
-    row = maybe_memo_first_row(df.agg(*aggs), memo)
+    row = df.agg(*aggs).collect()[0]
     out = {}
     for c in cols:
         lo, hi = row[f"_lo_{c}"], row[f"_hi_{c}"]
@@ -165,14 +159,13 @@ def zorder_key(
     cols: list,
     bits: "int | None" = None,
     bounds: "dict | None" = None,
-    memo_bounds: bool = False,
 ) -> DataFrame:
     """Attach the z-order key as ``_zkey``. ``bounds`` (col → (lo, hi))
     defaults to the corpus min/max; pass stored bounds to keep cell
     assignment stable across incremental rewrites (the stored-layout
     rule: a reader handed different bounds prunes wrong)."""
     bits = plan_zorder_bits(len(cols), bits)
-    bounds = bounds or column_bounds(df, cols, memo=memo_bounds)
+    bounds = bounds or column_bounds(df, cols)
     cells = [
         zorder_cell(c, bounds[c][0], bounds[c][1], bits) for c in cols
     ]
@@ -300,16 +293,11 @@ def _footer_rows(path: str) -> int:
 
 
 def _write_layout_meta(path: str, desc: dict) -> None:
-    """Atomic meta commit: temp sibling + os.replace — a crash mid-dump
-    must never leave a truncated ``_layout_meta.json`` that breaks every
-    later append (the publish_parquet stage-and-rename convention)."""
-    import json
     import os
 
-    tmp = os.path.join(path, LAYOUT_META + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(desc, fh)
-    os.replace(tmp, os.path.join(path, LAYOUT_META))
+    from database_migration_spark.functions.io import write_json_atomic
+
+    write_json_atomic(os.path.join(path, LAYOUT_META), desc)
 
 
 def clean_pending_append(path: str, meta: "dict | None") -> "dict | None":

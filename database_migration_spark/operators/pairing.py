@@ -174,24 +174,7 @@ def range_join(
         probe = i_valid.select(
             F.avg(F.col(hi_col).cast("long") - F.col(lo_col).cast("long")).alias("w")
         )
-        if max_cell is None:
-            # Without a cell cap the width is pure economics — a point
-            # lies in exactly one cell at ANY width, so the exact BETWEEN
-            # output is width-independent. Memoize the blocking scalar
-            # scan per (session, canonicalized plan): when the interval
-            # side is itself an expensive pipeline (the session-window
-            # query), the default-width pre-scan otherwise re-executes
-            # that whole subtree on every build (r12 memo_count family,
-            # guide §5). Safe without an opt-in flag because _plan_key
-            # refuses un-keyable plans outright — fully driver-local AND
-            # mixed file+literal leaves both fall back to the live scan
-            # (r13 hardening). With max_cell set the width DOES pick which
-            # cells get capped (result-affecting) — keep the live scan.
-            from database_migration_spark.functions.parallel import memo_first_row
-
-            row = memo_first_row(probe)
-        else:
-            row = probe.first()
+        row = probe.first()
         cell_width = max(1, int(row["w"])) if row and row["w"] is not None else 1
     w = int(cell_width)
     if w <= 0:
@@ -492,10 +475,7 @@ def _dict_side(names: DataFrame, cap: int = 4_000_000):
     broadcast, identical 26.25 M pairs). The candidate relation is many
     times the dictionary (every string × its deletion-variant collisions),
     so shuffling it to meet a ≤100 MB dict is backwards; above ``cap``
-    entries (~hundreds of MB) fall back to the shuffle join. The sizing
-    count is memoized per (session, plan) — it re-ran a 0.3 s job on every
-    bench lap (r12 opt round; economics-only decision, fan_out's memo
-    argument applies a fortiori).
+    entries (~hundreds of MB) fall back to the shuffle join.
 
     An r13 estimate-based fast path (skip the count when Catalyst's
     sizeInBytes reads small) was measured NEUTRAL at bench scale and
@@ -505,8 +485,6 @@ def _dict_side(names: DataFrame, cap: int = 4_000_000):
     strings), so a <32 MB estimate could force-broadcast a multi-hundred-
     MB, >cap-entry relation the count-based path would have routed to the
     shuffle join. The exact count stays the sole authority."""
-    from database_migration_spark.functions.parallel import memo_count
-
-    if memo_count(names) <= cap:
+    if names.count() <= cap:
         return F.broadcast
     return lambda d: d

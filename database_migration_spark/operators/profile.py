@@ -59,7 +59,6 @@ def profile_table(
     k: int = 5,
     distinct_mode: str = "exact",
     fan_key: str | None = None,
-    memo_bounds: bool = True,
 ) -> DataFrame:
     """Tall profile report for ``df`` (see module docstring for schema).
 
@@ -73,13 +72,6 @@ def profile_table(
     Exact stays the default so the report is oracle-reproducible; approx
     is the recurring-monitoring mode, same convention as
     ``validate.compute_metrics``.
-
-    ``memo_bounds=False`` re-collects the histogram-bounds row instead of
-    reusing the per-(session, plan) memo — REQUIRED when re-profiling a
-    MUTABLE target (a published store that swaps generations, a CDC
-    target) within one long-lived session: the memo's immutable-input
-    contract (memo_first_row) would otherwise freeze bucket edges at the
-    first profile while pass-2 counts see the new data (review finding).
     """
     if hist_cols is None:
         hist_cols = [
@@ -98,23 +90,13 @@ def profile_table(
 
     cols = df.columns
 
-    # pass 1: histogram bounds only — one aggregated row to the driver,
-    # memoized per (session, canonicalized plan): repeat builds over the
-    # same immutable input (bench laps, dashboards re-profiling a
-    # snapshot) skip the whole bounds job (r12, the memo_count rule)
-    from database_migration_spark.functions.parallel import memo_first_row
-
+    # pass 1: histogram bounds only — one aggregated row to the driver
     bounds = {}
     if hist_cols:
-        bounds_agg = df.agg(
+        row = df.agg(
             *[F.min(c).cast("long").alias(f"mn_{c}") for c in hist_cols],
             *[F.max(c).cast("long").alias(f"mx_{c}") for c in hist_cols],
-        )
-        row = (
-            memo_first_row(bounds_agg)
-            if memo_bounds
-            else bounds_agg.collect()[0]
-        )
+        ).collect()[0]
         bounds = {
             c: (row[f"mn_{c}"], row[f"mx_{c}"])
             for c in hist_cols

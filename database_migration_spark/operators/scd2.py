@@ -53,7 +53,6 @@ def scd2_merge(
     close_missing: bool = False,
     persist: bool = True,
     validate_unique: bool = True,
-    memo_guards: bool = False,
 ) -> DataFrame:
     """Merge an update batch into a type-2 dimension, returning the new
     dimension content (keys + attrs + valid_from/valid_to/is_current).
@@ -104,21 +103,13 @@ def scd2_merge(
         .alias("u")
     )
     if validate_unique:
-        # memo_guards=True caches this probe per (session, canonicalized
-        # plan) — ONLY for immutable file-backed update batches (bench
-        # fixtures): a real batch is new data per run, and driver-local
-        # literal relations canonicalize without their data
-        # (parallel.memo_collect). Violations still raise on the first
-        # (live) probe either way.
-        dup_probe = (
+        dup = (
             updates.groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("_c"))
             .where(F.col("_c") > 1)
             .limit(3)
+            .collect()
         )
-        from database_migration_spark.functions.parallel import maybe_memo_collect
-
-        dup = maybe_memo_collect(dup_probe, memo_guards)
         if dup:
             sample = [tuple(r[k] for k in keys) for r in dup]
             raise ValueError(

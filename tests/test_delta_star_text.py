@@ -7,6 +7,7 @@ from database_migration_spark.operators.delta_sync import (
     execute_sync,
     merge_upsert,
     plan_sync,
+    watermark,
 )
 from database_migration_spark.operators.star_schema import (
     build_dimension,
@@ -50,6 +51,8 @@ def test_execute_sync_roundtrip(spark, sf_smoke):
     orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     cutoff = F.lit("1997-06-01 00:00:00").cast("timestamp")
     target = orders.where(F.col("o_orderdate") < cutoff)
+    dates = [r.o_orderdate for r in target.select("o_orderdate").collect()]
+    assert watermark(target, "o_orderdate") == max(dates)
     merged = execute_sync(orders, target, ("o_orderkey",), "o_orderdate")
     assert merged.count() == orders.count()
     assert merged.exceptAll(orders).count() == 0

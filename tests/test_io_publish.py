@@ -113,3 +113,84 @@ def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
     assert {(r.k, r.v) for r in spark.read.parquet(local).collect()} == {
         (1, "a")
     }
+
+
+def _write_minhash_meta(spark, path, v):
+    from database_migration_spark.operators.dedup import _write_index_meta
+
+    _write_index_meta(path, num_perm=32, bands=8, buckets=v)
+
+
+def _write_hamming_meta(spark, path, v):
+    from database_migration_spark.operators.dedup import write_hamming_index
+
+    sigs = spark.createDataFrame([(1, 123, 456)], "id LONG, sig_lo LONG, sig_hi LONG")
+    write_hamming_index(sigs, path, buckets=v)
+
+
+def _write_ann_meta(spark, path, v):
+    import numpy as np
+
+    from database_migration_spark.operators.similarity import write_ivf_pq_index
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 1.0, 0.0])],
+        "vec_id LONG, embedding ARRAY<DOUBLE>",
+    )
+    coarse = np.eye(2, 4) * v
+    books = np.zeros((2, 2, 2))
+    write_ivf_pq_index(corpus, path, coarse, books)
+
+
+def _write_target_meta(spark, path, v):
+    from database_migration_spark.functions.io import write_target_meta
+
+    write_target_meta(path, ["k"], v)
+
+
+def _write_layout_meta(spark, path, v):
+    from database_migration_spark.operators import layout
+
+    os.makedirs(path, exist_ok=True)
+    layout._write_layout_meta(path, {"cols": ["a"], "bits": v})
+
+
+@pytest.mark.parametrize(
+    "write, meta",
+    [
+        (_write_minhash_meta, "_index_meta.json"),
+        (_write_hamming_meta, "_index_meta.json"),
+        (_write_ann_meta, "_ann_meta.json"),
+        (_write_target_meta, "_target_meta.json"),
+        (_write_layout_meta, "_layout_meta.json"),
+    ],
+    ids=["minhash", "hamming", "ann", "target", "layout"],
+)
+def test_meta_write_crash_keeps_committed_meta(
+    spark, tmp_path, monkeypatch, write, meta
+):
+    """A crash mid-dump of a store's meta JSON must leave the previously
+    committed meta readable: a truncated final file fails every later
+    append or probe that parses it."""
+    import json
+
+    path = str(tmp_path / "store")
+    write(spark, path, 4)
+    with open(os.path.join(path, meta)) as fh:
+        committed = json.load(fh)
+
+    def crash_mid_dump(obj, fh, *args, **kwargs):
+        fh.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", crash_mid_dump)
+    with pytest.raises(OSError, match="disk full"):
+        write(spark, path, 8)
+    monkeypatch.undo()
+
+    with open(os.path.join(path, meta)) as fh:
+        assert json.load(fh) == committed
+    for name in os.listdir(path):
+        if name.endswith(".json"):
+            with open(os.path.join(path, name)) as fh:
+                json.load(fh)  # no final meta path holds partial JSON

@@ -356,14 +356,12 @@ def test_classifier_is_joinless_single_pass(spark):
 
 
 def test_fan_out_decision_memo(spark, monkeypatch):
-    """The fan decision is memoized per (app, analyzed-plan semanticHash,
-    target): an identical relation re-built in the same session must not
-    re-pay the plan->RDD partition probe, a DIFFERENT relation must decide
-    for itself, and the memo changes economics only - rows and the
-    repartition itself are unchanged."""
+    """fan_out keeps no decision memo: every call pays its own fan
+    decision, even for an identical relation re-built in the same
+    session. The single-row-group documents scan comes back fanned to
+    more than one partition with its rows unchanged."""
     from database_migration_spark.functions import parallel
 
-    parallel._FAN_DECISION.clear()
     calls = []
     real = parallel._should_fan
 
@@ -374,12 +372,7 @@ def test_fan_out_decision_memo(spark, monkeypatch):
     monkeypatch.setattr(parallel, "_should_fan", counting)
     docs = Q.table(spark, SF, "documents").select("doc_id", "text")
     a = parallel.fan_out(docs)
-    assert len(calls) == 1
-    # same logical plan, fresh DataFrame object: memo hit, no second probe
-    docs2 = Q.table(spark, SF, "documents").select("doc_id", "text")
-    b = parallel.fan_out(docs2)
-    assert len(calls) == 1
-    # a different plan decides independently
-    parallel.fan_out(docs.where("doc_id >= 0"))
+    b = parallel.fan_out(Q.table(spark, SF, "documents").select("doc_id", "text"))
     assert len(calls) == 2
-    assert a.count() == docs.count() and b.rdd.getNumPartitions() > 1
+    assert a.rdd.getNumPartitions() > 1 and b.rdd.getNumPartitions() > 1
+    assert a.count() == docs.count()

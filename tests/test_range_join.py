@@ -125,35 +125,22 @@ def test_reserved_cell_column_raises(spark, pi):
         range_join(points.withColumn("_cell", F.lit(1)), intervals, "p", "lo", "hi")
 
 
-def test_default_width_memo_gating(spark, pi, monkeypatch):
-    """r12: the default-width scalar scan memoizes ONLY when max_cell is
-    None (width is pure economics there); with max_cell set the width
-    picks which cells get capped, so the live scan must stay."""
+def test_default_width_memo_gating(spark, pi):
+    """The default cell width comes from a live scalar scan on every
+    build (no memo): exact at the default width, stable across repeat
+    builds, and exact with ``max_cell`` set, where the width also picks
+    which cells get capped."""
     points, intervals = pi
     brute = _brute(points, intervals)
 
-    calls = {"memo": 0}
-    from database_migration_spark.functions.parallel import memo_first_row
-
-    def counting_memo(df):
-        calls["memo"] += 1
-        return memo_first_row(df)
-
-    monkeypatch.setattr(
-        "database_migration_spark.functions.parallel.memo_first_row",
-        counting_memo,
-    )
-    # plain default width: memoized, repeat-stable, exact
-    for _ in range(2):
-        got = {
+    def pairs(**kw):
+        return {
             (r["pid"], r["iid"])
             for r in range_join(
-                points, intervals, "p", "lo", "hi", keys=["k"]
+                points, intervals, "p", "lo", "hi", keys=["k"], **kw
             ).collect()
         }
-        assert got == brute
-    assert calls["memo"] == 2  # routed through the memo both builds
-    # max_cell set: must NOT consult the memo (live .first() scan)
-    before = calls["memo"]
-    range_join(points, intervals, "p", "lo", "hi", keys=["k"], max_cell=10)
-    assert calls["memo"] == before
+
+    assert pairs() == brute
+    assert pairs() == brute
+    assert pairs(max_cell=10) == brute
