@@ -155,8 +155,7 @@ def _readers(adapter, schemas: str, tables: str) -> dict:
 
 
 def cmd_validate(args) -> int:
-    from pyspark.sql import functions as F
-
+    from database_migration_spark.functions.parallel import map_tables
     from database_migration_spark.operators.validate import validate_pair
     from database_migration_spark.session import get_spark
 
@@ -188,21 +187,23 @@ def cmd_validate(args) -> int:
                   if t.upper() not in fold]
         print(f"{t}: MISSING in {' and '.join(absent)}")
         bad += 1
-    for k in keys:
-        t = lfold[k]
+
+    def compare(k):
         cmp, uncompared = validate_pair(
-            lread[lfold[k]](), rread[rfold[k]](), t,
+            lread[lfold[k]](), rread[rfold[k]](), lfold[k],
             distinct_mode=args.distinct_mode,
         )
-        dev = cmp.filter(F.col("status") == "DEVIATION")
-        n = dev.count()
-        ok = n == 0 and not uncompared
-        print(f"{t}: {'OK' if ok else f'{n} DEVIATIONS'}")
+        return cmp.filter(cmp.status == "DEVIATION").collect(), uncompared
+
+    # tables compare concurrently; the report prints in table order
+    for k, (dev, uncompared) in zip(keys, map_tables(spark, compare, keys)):
+        ok = not dev and not uncompared
+        print(f"{lfold[k]}: {'OK' if ok else f'{len(dev)} DEVIATIONS'}")
         for c in uncompared:
             print(f"  {c}: present on one side only — not metric-compared")
         if not ok:
             bad += 1
-            for r in dev.collect():
+            for r in dev:
                 print(f"  {r.metric} {r.column_name}: {r.value_a} != {r.value_b}")
     return 1 if bad else 0
 

@@ -10,11 +10,20 @@ At production scale this is a no-op: inputs already have >= parallelism
 partitions, and the guard below skips the shuffle entirely. It is never a
 substitute for proper partitioning of large tables — it exists for the
 small-input/expensive-compute shape.
+
+The driver side has the same shape one level up: a per-table loop of small
+jobs leaves the cores idle between stages. :func:`map_tables` runs such a
+loop's independent items on a bounded thread pool, so their job chains
+overlap.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import os
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 
 def fan_out(
@@ -94,3 +103,42 @@ def _should_fan(df: DataFrame, target: int, min_bytes: int = 0) -> bool:
     # conversion) decides — it both catches the unfanned 1-partition JDBC
     # read and prevents a redundant shuffle on an already-wide input
     return df.rdd.getNumPartitions() < target
+
+
+def map_tables(spark: SparkSession, fn, items) -> list:
+    """``[fn(x) for x in items]``, run on a bounded driver thread pool.
+
+    Each call inherits the calling thread's Spark local properties (job
+    group, scheduler pool, job tags) through ``inheritable_thread_target``,
+    wrapped per item so no two threads share one properties object. At
+    most ``min(len(items), defaultParallelism, usable host cores)`` run at
+    once — the last bound keeps a large cluster from getting one driver
+    thread per table; one worker is the serial loop. Results come back in
+    input order. The first failure seen propagates unchanged, items not
+    yet started are cancelled, and the running ones finish before this
+    returns, so no pool thread outlives the call.
+
+    ``fn`` must not change driver state that another item reads — in
+    particular no session conf value: ``spark.conf`` is session-wide, not
+    per thread.
+    """
+    items = list(items)
+    if not items:
+        return []
+    workers = min(
+        len(items),
+        spark.sparkContext.defaultParallelism,
+        len(os.sched_getaffinity(0)),
+    )
+    pool = ThreadPoolExecutor(workers, thread_name_prefix="map_tables")
+    try:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), x) for x in items
+        ]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f.done() and f.exception() is not None:
+                raise f.exception()
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(cancel_futures=True)

@@ -11,19 +11,23 @@ expect zero deviations. This module is that loop for Spark:
 
 Planning is pure (no cluster work beyond a catalog scan); execution streams
 each table source→target with the per-column transfer projection; validation
-computes the metric wide-rows on BOTH sides and diffs them. Every step logs
-to the JobLogger (the ETL.QUERY_WRAPPER analogue, delta_import:326-332).
+computes the metric wide-rows on BOTH sides and diffs them. Tables are
+independent, so execution runs them concurrently on a driver thread pool
+bounded by min(tables, default parallelism, host cores) — the reference's
+parallel imports (PARALLEL_STATEMENTS). Every step logs to the JobLogger (the
+ETL.QUERY_WRAPPER analogue, delta_import:326-332).
 """
 
 from __future__ import annotations
 
 import time
+from collections import Counter
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from database_migration_spark.catalog import Catalog
+from database_migration_spark.functions.parallel import map_tables
 from database_migration_spark.operators.validate import validate_pair
 from database_migration_spark.plans.ddl import generate_migration_plan
 from database_migration_spark.plans.statement_stream import MigrationPlan
@@ -136,16 +140,30 @@ class MigrationRunner:
         validate: bool = True,
         distinct_mode: str = "exact",
     ) -> MigrationReport:
-        report = MigrationReport()
-        comparisons: list[DataFrame] = []
+        """Copy (and by default validate) every catalog table into
+        ``target_dir``.
+
+        Each table's read → write → count → metric diff is one independent
+        task; the tasks run concurrently through
+        :func:`~database_migration_spark.functions.parallel.map_tables`
+        (at most min(tables, default parallelism, host cores) at once), so
+        one table's small jobs overlap another's instead of leaving cores
+        idle between stages. ``report.tables`` stays in (schema, table)
+        order and each table logs its ``read``/``copy``/``validate`` rows
+        in that order; the first table that raises aborts the run with its
+        exception. ``report.validation`` holds the collected comparison
+        rows as a driver-local DataFrame: reading it runs no metric scan.
+        """
         # a table name in several schemas would write to the SAME target
         # path, the later copy silently replacing the earlier — those
         # tables get schema-qualified paths (and a warning) instead
-        name_counts: dict[str, int] = {}
-        for t in catalog.tables:
-            name_counts[t.table] = name_counts.get(t.table, 0) + 1
-        for t in sorted(catalog.tables, key=lambda x: (x.schema, x.table)):
-            self.logger.log(f"read {t.table}", "start")
+        name_counts = Counter(t.table for t in catalog.tables)
+
+        def migrate_one(t):
+            # the detail names the schema: tables that share a name across
+            # schemas run concurrently, and their log rows interleave
+            qualified = f"{t.schema}.{t.table}"
+            self.logger.log(f"read {t.table}", "start", qualified)
             # JDBC adapters read through the typed TableMeta contract
             # (explicit column list, transfer exprs); file adapters read by
             # name
@@ -168,9 +186,9 @@ class MigrationRunner:
             src.write.mode("overwrite").parquet(target_path)
             tgt = self.spark.read.parquet(target_path)
             n = tgt.count()
-            self.logger.log(f"copy {t.table}", "done", rows=n)
+            self.logger.log(f"copy {t.table}", "done", qualified, rows=n)
 
-            dev = 0
+            cmp_schema, rows, dev = None, [], 0
             if validate:
                 # sidecar columns the portable reader adds (ts_ns) exist on
                 # both sides here, but a JDBC source would not have them —
@@ -185,17 +203,24 @@ class MigrationRunner:
                     f"{t.table}.{c}: present on one side only — not metric-compared"
                     for c in uncompared
                 )
-                comparisons.append(cmp)
-                dev = cmp.filter(F.col("status") == "DEVIATION").count()
+                cmp_schema, rows = cmp.schema, cmp.collect()
+                dev = sum(r.status == "DEVIATION" for r in rows)
                 self.logger.log(
                     f"validate {t.table}",
                     "ok" if dev == 0 else "DEVIATION",
+                    qualified,
                     rows=dev,
                 )
-            report.tables.append(TableReport(t.table, n, dev, warnings))
-        if comparisons:
-            out = comparisons[0]
-            for c in comparisons[1:]:
-                out = out.unionByName(c)
-            report.validation = out
+            return TableReport(t.table, n, dev, warnings), cmp_schema, rows
+
+        done = map_tables(
+            self.spark,
+            migrate_one,
+            sorted(catalog.tables, key=lambda x: (x.schema, x.table)),
+        )
+        report = MigrationReport(tables=[rep for rep, _s, _rows in done])
+        if validate and done:
+            report.validation = self.spark.createDataFrame(
+                [r for _rep, _s, rows in done for r in rows], done[0][1]
+            )
         return report

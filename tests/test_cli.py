@@ -51,6 +51,44 @@ def test_cli_validate_flags_deviation(spark, sf_smoke, tmp_path, capsys):
     assert "DEVIATION" in out
 
 
+def test_cli_validate_report_covers_every_outcome(spark, sf_smoke, tmp_path, capsys):
+    """OK, DEVIATION, MISSING and one-sided-column outcomes in one run: the
+    tables compare concurrently, yet the report prints MISSING first and
+    then each compared table in --tables order, byte for byte as the
+    one-table-at-a-time loop printed it."""
+    right = str(tmp_path / "mixed")
+
+    def put(table, fn):
+        fn(spark.read.parquet(f"{sf_smoke}/{table}.parquet")).write.parquet(
+            f"{right}/{table}")
+
+    put("supplier", lambda df: df)
+    put("region", lambda df: df.withColumn(
+        "r_name", F.concat(F.col("r_name"), F.lit("_x"))))
+    put("nation", lambda df: df.drop("n_name"))
+    put("customer", lambda df: df.withColumn(
+        "c_acctbal", F.col("c_acctbal") + F.lit(1)).drop("c_mktsegment"))
+    rc = main(["validate", "--left", sf_smoke, "--right", right,
+               "--tables", "supplier,region,ghost,nation,customer"])
+    out = capsys.readouterr().out
+    assert rc == 1
+    assert out.splitlines() == [
+        "ghost: MISSING in left and right",
+        "supplier: OK",
+        "region: 4 DEVIATIONS",
+        "  MAX_LEN r_name: 11 != 13",
+        "  MAX_VAL r_name: MIDDLE EAST != MIDDLE EAST_x",
+        "  MIN_LEN r_name: 4 != 6",
+        "  MIN_VAL r_name: AFRICA != AFRICA_x",
+        "nation: 0 DEVIATIONS",
+        "  n_name: present on one side only — not metric-compared",
+        "customer: 2 DEVIATIONS",
+        "  c_mktsegment: present on one side only — not metric-compared",
+        "  MAX_VAL c_acctbal: 9916.120000 != 9917.120000",
+        "  MIN_VAL c_acctbal: -846.690000 != -845.690000",
+    ]
+
+
 def test_cli_diff_reports_drift(spark, sf_smoke, tmp_path, capsys):
     # "new" source: region gained a column, nation dropped
     new = str(tmp_path / "new_src")

@@ -1,6 +1,10 @@
 """End-to-end migration runner + constraints tests (SURVEY §7.2 minimum
 slice: catalog → typemap → copy → validate with zero deviations)."""
 
+import os
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from database_migration_spark.operators.constraints import (
@@ -27,6 +31,9 @@ def test_full_migration_roundtrip(spark, sf_smoke, tmp_path):
     ]
     assert {t.table for t in report.tables} == {"nation", "region", "events"}
     assert report.validation.filter(F.col("status") == "DEVIATION").count() == 0
+    # the comparison rows were collected once during execute: reading the
+    # report is a driver-local scan, not a re-run of the metric pipeline
+    assert report.validation.inputFiles() == []
     # logger captured start/copy/validate per table
     log = logger.to_df(spark)
     assert log.filter(F.col("step").startswith("validate")).count() == 3
@@ -158,33 +165,200 @@ def test_planner_carries_views_and_partitions(spark):
     assert "-- app.v1" in sql and "-- SELECT id FROM t" in sql
 
 
+def _colliding_catalog():
+    from database_migration_spark.catalog import Catalog, ColumnMeta, TableMeta
+
+    return Catalog(tables=[
+        TableMeta(schema=s, table="t", columns=(ColumnMeta(s, "t", "id", 1, "bigint"),))
+        for s in ("S1", "S2")
+    ])
+
+
+class _RangeAdapter:
+    """Schema S1 holds ids 100-104, every other schema ids 200-204."""
+
+    def __init__(self, spark):
+        self.spark = spark
+
+    def read_table(self, t):
+        base = 100 if t.schema == "S1" else 200
+        return self.spark.range(base, base + 5)
+
+
 def test_runner_schema_qualifies_colliding_table_paths(spark, tmp_path):
     """Two schemas carrying the same table name must land in DISTINCT
     target paths (schema-prefixed) with a warning — not silently overwrite
     one another."""
-    from database_migration_spark.catalog import Catalog, ColumnMeta, TableMeta
-    from database_migration_spark.runner import MigrationRunner
-
-    def tmeta(schema, mark):
-        return TableMeta(
-            schema=schema, table="t",
-            columns=(ColumnMeta(schema, "t", "id", 1, "bigint"),),
-        )
-
-    class FakeAdapter:
-        def read_table(self, t):
-            base = 100 if t.schema == "S1" else 200
-            return spark.range(base, base + 5).select(
-                __import__("pyspark.sql.functions", fromlist=["col"]).col("id")
-            )
-
-    cat = Catalog(tables=[tmeta("S1", 1), tmeta("S2", 2)])
     dest = str(tmp_path / "multi")
     report = MigrationRunner(spark).execute(
-        cat, FakeAdapter(), dest, validate=False
+        _colliding_catalog(), _RangeAdapter(spark), dest, validate=False
     )
     a = spark.read.parquet(f"{dest}/S1_t")
     b = spark.read.parquet(f"{dest}/S2_t")
     assert {r.id for r in a.collect()} == set(range(100, 105))
     assert {r.id for r in b.collect()} == set(range(200, 205))
     assert any("several schemas" in w for t in report.tables for w in t.warnings)
+
+
+def _pool_threads():
+    return [t for t in threading.enumerate() if t.name.startswith("map_tables")]
+
+
+def _fixture_catalog(src, tables):
+    return MigrationPlanner(src).scan().filter("%", tables)
+
+
+@pytest.mark.skipif(
+    len(os.sched_getaffinity(0)) < 2, reason="overlap needs two usable cores"
+)
+def test_runner_reads_tables_concurrently(spark, sf_smoke, tmp_path):
+    """Two tables' reads must be in flight at once: each read waits for the
+    other at a two-party barrier, which a one-table-at-a-time loop never
+    passes (the first read times out)."""
+    inner = ParquetSource(spark, sf_smoke)
+    barrier = threading.Barrier(2, timeout=30)
+
+    class BarrierSource:
+        def read(self, table):
+            barrier.wait()
+            return inner.read(table)
+
+    cat = _fixture_catalog(inner, "region,nation")
+    report = MigrationRunner(spark).execute(cat, BarrierSource(), str(tmp_path / "t"))
+    assert report.ok
+    assert [t.table for t in report.tables] == ["nation", "region"]
+    assert not _pool_threads()
+
+
+def test_runner_reraises_first_table_failure(spark, sf_smoke, tmp_path):
+    """A table that raises aborts execute with that very exception, and no
+    pool thread outlives the call."""
+    inner = ParquetSource(spark, sf_smoke)
+    boom = RuntimeError("region source unreachable")
+
+    class FailingSource:
+        def read(self, table):
+            if table == "region":
+                raise boom
+            return inner.read(table)
+
+    cat = _fixture_catalog(inner, "region,nation,customer")
+    with pytest.raises(RuntimeError) as err:
+        MigrationRunner(spark).execute(cat, FailingSource(), str(tmp_path / "t"))
+    assert err.value is boom
+    assert not _pool_threads()
+
+
+def test_map_tables_order_and_cancellation(spark):
+    """Results come back in input order whatever order items finish in;
+    a failure raises unchanged and cancels the items not yet started."""
+    import random
+    import time
+
+    from database_migration_spark.functions.parallel import map_tables
+
+    def slow_square(x):
+        time.sleep(random.random() / 50)
+        return x * x
+
+    assert map_tables(spark, slow_square, range(40)) == [x * x for x in range(40)]
+    assert map_tables(spark, slow_square, []) == []
+
+    started = []
+    boom = ValueError("item 0")
+
+    def first_fails(x):
+        started.append(x)
+        if x == 0:
+            raise boom
+        time.sleep(0.5)
+
+    with pytest.raises(ValueError) as err:
+        map_tables(spark, first_fails, range(40))
+    assert err.value is boom
+    assert len(started) < 40 and not _pool_threads()
+
+
+def test_job_logger_keeps_every_concurrent_row():
+    """JobLogger.log from many threads at a tiny switch interval loses no
+    row and keeps each thread's rows in its own order."""
+    import sys
+
+    logger = JobLogger()
+    n_threads, n_rows = 16, 300
+
+    def log_many(i):
+        for j in range(n_rows):
+            logger.log(f"step {i}", "done", rows=j)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=log_many, args=(i,)) for i in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(logger.rows) == n_threads * n_rows
+    for i in range(n_threads):
+        mine = [r["rows"] for r in logger.rows if r["step"] == f"step {i}"]
+        assert mine == list(range(n_rows))
+
+
+def _run_shape(spark, cat, adapter, dest):
+    logger = JobLogger()
+    report = MigrationRunner(spark, logger).execute(cat, adapter, dest)
+    steps: dict[str, list[str]] = {}
+    for r in logger.rows:
+        verb, table = r["step"].split(" ", 1)
+        assert r["detail"].endswith(f".{table}")
+        steps.setdefault(r["detail"], []).append(verb)
+    rows = sorted(tuple(r) for r in report.validation.collect())
+    return [vars(t) for t in report.tables], steps, rows
+
+
+@pytest.mark.parametrize("case", ["fixture", "colliding"])
+def test_runner_concurrent_matches_serial(spark, sf_smoke, tmp_path, monkeypatch, case):
+    """The concurrent run reports exactly what a one-table-at-a-time run
+    does (one usable core makes the pool a serial loop): same table
+    order, rows, deviations, warnings and comparison rows, and every
+    table logs read → copy → validate in that order."""
+    if case == "fixture":
+        adapter = ParquetSource(spark, sf_smoke)
+        cat = _fixture_catalog(adapter, "region,nation,customer,events")
+    else:
+        adapter, cat = _RangeAdapter(spark), _colliding_catalog()
+    concurrent = _run_shape(spark, cat, adapter, str(tmp_path / "c"))
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0})
+    serial = _run_shape(spark, cat, adapter, str(tmp_path / "s"))
+    assert concurrent == serial
+    reports, steps, _rows = concurrent
+    assert all(r["deviations"] == 0 for r in reports)
+    assert all(v == ["read", "copy", "validate"] for v in steps.values())
+    if case == "colliding":
+        assert [r["table"] for r in reports] == ["t", "t"]
+        assert all("several schemas" in " ".join(r["warnings"]) for r in reports)
+
+
+def test_runner_deviation_counts_from_collected_rows(spark, tmp_path):
+    """Deviation counts come from the same collected rows the report
+    holds: a source that differs on every query (the query's start time
+    in µs) deviates, and its count equals the DEVIATION rows of
+    report.validation."""
+
+    class DriftingAdapter:
+        def read_table(self, t):
+            return spark.range(20).select(
+                (F.col("id") + F.unix_micros(F.current_timestamp())).alias("u"))
+
+    from database_migration_spark.catalog import Catalog, ColumnMeta, TableMeta
+
+    cat = Catalog(tables=[TableMeta("S", "drift", (ColumnMeta("S", "drift", "u", 1, "bigint"),))])
+    report = MigrationRunner(spark).execute(cat, DriftingAdapter(), str(tmp_path / "d"))
+    (rep,) = report.tables
+    assert rep.deviations > 0 and not report.ok
+    assert report.validation.inputFiles() == []
+    assert report.validation.filter(F.col("status") == "DEVIATION").count() == rep.deviations
