@@ -21,6 +21,14 @@ from __future__ import annotations
 import argparse
 import sys
 
+from database_migration_spark.functions import store_meta
+
+
+def _with_defaults(defaults: dict, **given) -> tuple:
+    """The given flag values in order, each None replaced by its default
+    (the library module that owns the defaults passes them in)."""
+    return tuple(defaults[n] if v is None else v for n, v in given.items())
+
 
 def _source(spark, root: str, args=None):
     """Adapter dispatch: a ``jdbc:`` URL builds a JdbcSourceAdapter for
@@ -461,10 +469,7 @@ def cmd_layout(args) -> int:
     directory, layout or not: at 100 TB the compressed size is the scan
     cost, and a clustered write RLE-compresses what a hash-scattered
     write cannot."""
-    from database_migration_spark.operators.layout import (
-        read_layout_meta,
-        zorder_span_report,
-    )
+    from database_migration_spark.operators.layout import zorder_span_report
 
     if args.action == "stats":
         import os
@@ -489,10 +494,10 @@ def cmd_layout(args) -> int:
                   f"codecs {','.join(c['codecs'])}")
         return 0
 
-    meta = read_layout_meta(args.target)
+    meta = store_meta.read(args.target, "layout")
     if meta is None:
         print(f"error: no z-order layout at {args.target} "
-              "(_layout_meta.json missing) — create one with "
+              "(its meta is missing) — create one with "
               "`compact --zorder` first", file=sys.stderr)
         return 2
 
@@ -806,12 +811,14 @@ def cmd_scd2(args) -> int:
         PT_COL,
         affected_partitions,
         publish_parquet,
-        resolve_partitions,
         store_has_partitions,
     )
 
     try:
-        n_pt = resolve_partitions(args.target, keys, args.partitions)
+        n_pt = store_meta.resolve(
+            args.target, "target",
+            {"partitions": args.partitions, "keys": keys}, {},
+        )["partitions"]
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
         return 2
@@ -1469,12 +1476,14 @@ def cmd_cdc(args) -> int:
     from database_migration_spark.functions.io import (
         PT_COL,
         publish_parquet,
-        resolve_partitions,
         store_has_partitions,
     )
 
     try:
-        n_pt = resolve_partitions(args.target, keys, args.partitions)
+        n_pt = store_meta.resolve(
+            args.target, "target",
+            {"partitions": args.partitions, "keys": keys}, {},
+        )["partitions"]
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
         return 2
@@ -1581,11 +1590,11 @@ def cmd_dedup(args) -> int:
     from pyspark.sql import functions as F
 
     from database_migration_spark.operators.dedup import (
+        INDEX_DEFAULTS,
         append_fingerprint_index,
         compact_partitioned,
         fingerprint_store,
         incremental_dedup_indexed,
-        read_index_meta,
         write_fingerprint_index,
     )
     from database_migration_spark.session import get_spark
@@ -1598,9 +1607,10 @@ def cmd_dedup(args) -> int:
             print("error: pass --out for the label table, or --dry-run "
                   "for cluster stats only", file=sys.stderr)
             return 2
-        k = args.k if args.k is not None else 5
-        num_perm = args.num_perm if args.num_perm is not None else 32
-        bands = args.bands if args.bands is not None else 4
+        k, num_perm, bands, seed = _with_defaults(
+            INDEX_DEFAULTS, shingle_k=args.k, num_perm=args.num_perm,
+            bands=args.bands, seed=args.seed,
+        )
         if k < 1 or num_perm < 1 or bands < 1:
             print("error: dedup cluster needs --k, --num-perm and "
                   "--bands all >= 1", file=sys.stderr)
@@ -1663,22 +1673,17 @@ def cmd_dedup(args) -> int:
             print(f"error: no fingerprint index at {args.index} "
                   "(run `dedup build` first)", file=sys.stderr)
             return None
-        meta = read_index_meta(args.index) or {}
-        for name, given in (("shingle_k", args.k), ("seed", args.seed),
-                            ("num_perm", args.num_perm)):
-            stored = meta.get(name)
-            if given is not None and stored is not None and given != stored:
-                print(f"error: index at {args.index} was written with "
-                      f"{name}={stored} but the caller passed {name}="
-                      f"{given} — fingerprints would never match the "
-                      f"stored layout {meta}", file=sys.stderr)
-                return None
-        return (
-            args.k if args.k is not None else meta.get("shingle_k", 5),
-            args.seed if args.seed is not None else meta.get("seed", 42),
-            args.num_perm if args.num_perm is not None
-            else meta.get("num_perm", 32),
-        )
+        try:
+            p = store_meta.resolve(
+                args.index, "minhash",
+                {"shingle_k": args.k, "seed": args.seed,
+                 "num_perm": args.num_perm},
+                INDEX_DEFAULTS,
+            )
+        except ValueError as e:
+            print(f"error: {e}", file=sys.stderr)
+            return None
+        return p["shingle_k"], p["seed"], p["num_perm"]
 
     if args.media:
         if args.action not in ("build", "append", "probe"):
@@ -1705,7 +1710,7 @@ def cmd_dedup(args) -> int:
             num_perm=num_perm,
             bands=bands,
             threshold_permille=args.min_agree,
-            seed=args.seed if args.seed is not None else 42,
+            seed=seed,
         )
         labels = connected_components(pairs, df, id_col=args.id_col)
         if not args.dry_run:
@@ -1774,19 +1779,19 @@ def cmd_dedup(args) -> int:
         df = corpus_df()
         if df is None:
             return 2
-        k = args.k if args.k is not None else 5
-        seed = args.seed if args.seed is not None else 42
-        num_perm = args.num_perm if args.num_perm is not None else 32
+        k, seed, num_perm, bands, buckets = _with_defaults(
+            INDEX_DEFAULTS, shingle_k=args.k, seed=args.seed,
+            num_perm=args.num_perm, bands=args.bands, buckets=args.buckets,
+        )
         fp = fingerprint_store(df, args.text_col, args.id_col, k=k,
                                num_perm=num_perm, seed=seed)
         write_fingerprint_index(
-            fp, args.index, num_perm=num_perm,
-            bands=args.bands if args.bands is not None else 4,
-            buckets=args.buckets if args.buckets is not None else 64,
+            fp, args.index, num_perm=num_perm, bands=bands, buckets=buckets,
             extra={"shingle_k": k, "seed": seed},
         )
         n = spark.read.parquet(f"{args.index}/content").count()
-        print(f"index built: {n} documents, layout {read_index_meta(args.index)}")
+        print(f"index built: {n} documents, layout "
+              f"{store_meta.read(args.index, 'minhash')}")
         return 0
 
     if args.action == "append":
@@ -1931,12 +1936,9 @@ def _dedup_sub_indexes(index_path: str) -> tuple:
     for hamming (media/simhash) stores, content+bands for minhash
     fingerprint stores — shared by forget and compact (review finding:
     the detection was copy-pasted in both branches)."""
-    from database_migration_spark.operators.dedup import read_index_meta
-
-    meta = read_index_meta(index_path) or {}
-    return ("chunks",) if meta.get("kind") == "hamming" else (
-        "content", "bands"
-    )
+    if store_meta.read(index_path, "hamming") is not None:
+        return ("chunks",)
+    return ("content", "bands")
 
 
 def _dedup_media(args, spark, corpus_df) -> int:
@@ -1953,9 +1955,9 @@ def _dedup_media(args, spark, corpus_df) -> int:
     from pyspark.sql import functions as F
 
     from database_migration_spark.operators.dedup import (
+        HAMMING_DEFAULTS,
         append_hamming_index,
         hamming_dedup_indexed,
-        read_index_meta,
         write_hamming_index,
     )
     from database_migration_spark.operators.multimodal import (
@@ -1995,15 +1997,16 @@ def _dedup_media(args, spark, corpus_df) -> int:
                       f"--payload-col (got {args.payload_col!r})",
                       file=sys.stderr)
                 return 2
+            max_hamming, buckets = _with_defaults(
+                HAMMING_DEFAULTS, max_hamming=args.max_hamming,
+                buckets=args.buckets,
+            )
             write_hamming_index(
-                sigs, args.index,
-                max_hamming=(args.max_hamming
-                             if args.max_hamming is not None else 3),
-                buckets=args.buckets if args.buckets is not None else 64,
+                sigs, args.index, max_hamming=max_hamming, buckets=buckets,
                 extra={"signature": "dhash64"},
             )
             print(f"media index built: {n} image signature(s), layout "
-                  f"{read_index_meta(args.index)}")
+                  f"{store_meta.read(args.index, 'hamming')}")
             return 0
 
         if args.action == "append":
@@ -2388,6 +2391,23 @@ def cmd_ann(args) -> int:
             ).alias(args.vec_col),
         )
 
+    def stored_ann():
+        """The index's meta with ``normalized`` resolved against
+        --normalize/--no-normalize, or None (error printed) when there is
+        no index or the flag contradicts it."""
+        try:
+            meta = store_meta.resolve(
+                args.index, "ann", {"normalized": args.normalize}, {}
+            )
+        except ValueError as e:
+            print(f"error: {e}", file=sys.stderr)
+            return None
+        if "coarse" not in meta:  # every stored ANN meta carries coarse
+            print(f"error: no ANN index at {args.index} "
+                  "(run `ann build` first)", file=sys.stderr)
+            return None
+        return meta
+
     if args.action == "suggest":
         df = table_df(args.corpus)
         if df is None:
@@ -2451,7 +2471,7 @@ def cmd_ann(args) -> int:
             compact_partitioned,
         )
 
-        if not os.path.exists(os.path.join(args.index, "_ann_meta.json")):
+        if store_meta.read(args.index, "ann") is None:
             print(f"error: no ANN index at {args.index} "
                   "(run `ann build` first)", file=sys.stderr)
             return 2
@@ -2476,15 +2496,14 @@ def cmd_ann(args) -> int:
             ivf_pq_index_drift,
         )
 
-        if not os.path.exists(os.path.join(args.index, "_ann_meta.json")):
+        meta = store_meta.read(args.index, "ann")
+        if meta is None:
             print(f"error: no ANN index at {args.index} "
                   "(run `ann build` first)", file=sys.stderr)
             return 2
         df = table_df(args.corpus)
         if df is None:
             return 2
-        with open(os.path.join(args.index, "_ann_meta.json")) as fh:
-            meta = json.load(fh)
         corpus = normalized(df) if meta.get("normalized") else df.select(
             args.id_col, args.vec_col
         )
@@ -2500,24 +2519,13 @@ def cmd_ann(args) -> int:
             append_ivf_pq_index,
         )
 
-        meta_path = os.path.join(args.index, "_ann_meta.json")
-        if not os.path.exists(meta_path):
-            print(f"error: no ANN index at {args.index} "
-                  "(run `ann build` first)", file=sys.stderr)
+        meta = stored_ann()
+        if meta is None:
             return 2
-        with open(meta_path) as fh:
-            meta = json.load(fh)
         df = table_df(args.corpus)
         if df is None:
             return 2
-        stored_norm = bool(meta.get("normalized", False))
-        if args.normalize is not None and bool(args.normalize) != stored_norm:
-            print(f"error: index at {args.index} was built with "
-                  f"normalized={stored_norm} but the caller passed "
-                  f"normalized={bool(args.normalize)} — appended vectors "
-                  "would not be comparable", file=sys.stderr)
-            return 2
-        corpus = normalized(df) if stored_norm else df.select(
+        corpus = normalized(df) if meta["normalized"] else df.select(
             args.id_col, args.vec_col
         )
         n = corpus.count()
@@ -2528,24 +2536,14 @@ def cmd_ann(args) -> int:
         return 0
 
     # search
-    meta_path = os.path.join(args.index, "_ann_meta.json")
-    if not os.path.exists(meta_path):
-        print(f"error: no ANN index at {args.index} "
-              "(run `ann build` first)", file=sys.stderr)
+    meta = stored_ann()
+    if meta is None:
         return 2
-    with open(meta_path) as fh:
-        meta = json.load(fh)
     df = table_df(args.queries)
     if df is None:
         return 2
-    stored_norm = bool(meta.get("normalized", False))
-    if args.normalize is not None and bool(args.normalize) != stored_norm:
-        print(f"error: index at {args.index} was built with "
-              f"normalized={stored_norm} but the caller passed "
-              f"normalized={bool(args.normalize)} — distances would not be "
-              "comparable", file=sys.stderr)
-        return 2
-    q = normalized(df) if stored_norm else df.select(args.id_col, args.vec_col)
+    q = (normalized(df) if meta["normalized"]
+         else df.select(args.id_col, args.vec_col))
     n_probe = args.n_probe or max(1, math.ceil(meta["n_centroids"] / 7))
     out = S.ivf_pq_topk_from_index(
         spark, args.index, q, k=args.k, n_probe=n_probe,

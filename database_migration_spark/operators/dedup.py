@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from database_migration_spark.functions import store_meta
 from database_migration_spark.functions.hashing import (
     md5_long,
     md5_long_spark_sql,
@@ -34,6 +35,14 @@ from database_migration_spark.functions.hashing import (
     permutation_params,
 )
 from database_migration_spark.functions.text_exprs import char_shingles, normalize_text
+
+# The one owner of the index defaults: the writers' signatures, the
+# probers' resolution of a legacy (meta-less) index and the CLI all read
+# them here. shingle_k/seed are the signing parameters the CLI stores.
+INDEX_DEFAULTS = {
+    "num_perm": 32, "bands": 4, "buckets": 64, "shingle_k": 5, "seed": 42,
+}
+HAMMING_DEFAULTS = {"bits": 64, "max_hamming": 3, "buckets": 64}
 
 
 def exact_dedup(
@@ -1115,9 +1124,9 @@ def fingerprint_store(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 32,
-    seed: int = 42,
+    k: int = INDEX_DEFAULTS["shingle_k"],
+    num_perm: int = INDEX_DEFAULTS["num_perm"],
+    seed: int = INDEX_DEFAULTS["seed"],
     persist: bool = True,
 ) -> DataFrame:
     """The compact per-document fingerprint a corpus persists so future
@@ -1235,9 +1244,9 @@ def _decision_select(batch_fp: DataFrame, exact: DataFrame, near: DataFrame) -> 
 def write_fingerprint_index(
     store_fp: DataFrame,
     path: str,
-    num_perm: int = 32,
-    bands: int = 4,
-    buckets: int = 64,
+    num_perm: int = INDEX_DEFAULTS["num_perm"],
+    bands: int = INDEX_DEFAULTS["bands"],
+    buckets: int = INDEX_DEFAULTS["buckets"],
     extra: dict | None = None,
 ) -> None:
     """Write a :func:`fingerprint_store` relation as two partition-pruned
@@ -1274,56 +1283,9 @@ def write_fingerprint_index(
 def _write_index_meta(
     path: str, num_perm: int, bands: int, buckets: int, extra: dict | None = None
 ) -> None:
-    import os
-
-    from database_migration_spark.functions.io import write_json_atomic
-
-    os.makedirs(path, exist_ok=True)
     meta = {"num_perm": num_perm, "bands": bands, "buckets": buckets}
     meta.update(extra or {})
-    write_json_atomic(os.path.join(path, "_index_meta.json"), meta)
-
-
-def read_index_meta(path: str) -> dict | None:
-    """The stored layout parameters of a fingerprint index, or None for an
-    index written before the metadata existed (callers then fall back to
-    their explicit/default parameters — the legacy contract)."""
-    import json
-    import os
-
-    meta_path = os.path.join(path, "_index_meta.json")
-    if not os.path.exists(meta_path):
-        return None
-    with open(meta_path) as fh:
-        return json.load(fh)
-
-
-def _resolve_index_params(
-    path: str, num_perm: int | None, bands: int | None, buckets: int | None
-) -> tuple[int, int, int]:
-    """Stored metadata wins; an EXPLICIT caller value that contradicts it
-    raises (the silent-mispruning trap); None falls back to the stored
-    value, or to the historical defaults for legacy indexes."""
-    meta = read_index_meta(path) or {}
-    if meta.get("kind") == "hamming":
-        raise ValueError(
-            f"index at {path} is a hamming signature index — probe it "
-            "with hamming_dedup_indexed, not the minhash prober (the "
-            "chunk keys and band keys never collide)"
-        )
-    out = []
-    for name, given, default in (
-        ("num_perm", num_perm, 32), ("bands", bands, 4), ("buckets", buckets, 64)
-    ):
-        stored = meta.get(name)
-        if given is not None and stored is not None and given != stored:
-            raise ValueError(
-                f"index at {path} was written with {name}={stored} but the "
-                f"caller passed {name}={given} — a mismatch prunes the wrong "
-                "partitions and silently misses duplicates"
-            )
-        out.append(given if given is not None else (stored if stored is not None else default))
-    return tuple(out)
+    store_meta.write(path, "minhash", meta)
 
 
 def append_fingerprint_index(
@@ -1342,8 +1304,14 @@ def append_fingerprint_index(
     periodically once small files accumulate (standard parquet hygiene).
     Layout parameters resolve from the index's stored metadata; explicit
     values that contradict it raise."""
-    num_perm, bands, buckets = _resolve_index_params(path, num_perm, bands, buckets)
-    _write_fingerprint_index(new_fp, path, num_perm, bands, buckets, "append")
+    p = store_meta.resolve(
+        path, "minhash",
+        {"num_perm": num_perm, "bands": bands, "buckets": buckets},
+        INDEX_DEFAULTS,
+    )
+    _write_fingerprint_index(
+        new_fp, path, p["num_perm"], p["bands"], p["buckets"], "append"
+    )
 
 
 def _write_fingerprint_index(
@@ -1401,7 +1369,12 @@ def incremental_dedup_indexed(
     """
     from pyspark import StorageLevel
 
-    num_perm, bands, buckets = _resolve_index_params(path, num_perm, bands, buckets)
+    p = store_meta.resolve(
+        path, "minhash",
+        {"num_perm": num_perm, "bands": bands, "buckets": buckets},
+        INDEX_DEFAULTS,
+    )
+    num_perm, bands, buckets = p["num_perm"], p["bands"], p["buckets"]
     sig_cols = [f"sig_{i}" for i in range(num_perm)]
     if persist_inputs:
         batch_fp = batch_fp.persist(StorageLevel.MEMORY_AND_DISK)
@@ -1454,9 +1427,9 @@ def incremental_dedup_indexed(
 def write_hamming_index(
     sigs: DataFrame,
     path: str,
-    bits: int = 64,
-    max_hamming: int = 3,
-    buckets: int = 64,
+    bits: int = HAMMING_DEFAULTS["bits"],
+    max_hamming: int = HAMMING_DEFAULTS["max_hamming"],
+    buckets: int = HAMMING_DEFAULTS["buckets"],
     extra: dict | None = None,
 ) -> None:
     """Persist (id, sig_lo, sig_hi) Hamming signatures — text SimHash or
@@ -1478,16 +1451,11 @@ def write_hamming_index(
     ``max_hamming`` reads different chunk offsets and silently misses
     every duplicate). ``extra`` records signature provenance (the CLI
     stores the payload hash kind there)."""
-    import os
-
-    from database_migration_spark.functions.io import write_json_atomic
-
     _write_hamming_index(sigs, path, bits, max_hamming, buckets, "overwrite")
-    os.makedirs(path, exist_ok=True)
     meta = {"kind": "hamming", "bits": bits, "max_hamming": max_hamming,
             "buckets": buckets}
     meta.update(extra or {})
-    write_json_atomic(os.path.join(path, "_index_meta.json"), meta)
+    store_meta.write(path, "hamming", meta)
 
 
 def _write_hamming_index(
@@ -1505,43 +1473,6 @@ def _write_hamming_index(
     chunks.write.mode(mode).partitionBy("bucket").parquet(f"{path}/chunks")
 
 
-def _resolve_hamming_params(
-    path: str,
-    bits: "int | None",
-    max_hamming: "int | None",
-    buckets: "int | None",
-) -> tuple:
-    """Stored metadata wins; explicit contradictions raise (the
-    silent-misprune trap); a minhash fingerprint index is rejected
-    loudly rather than probed with the wrong key derivation."""
-    meta = read_index_meta(path) or {}
-    if meta and meta.get("kind") != "hamming":
-        raise ValueError(
-            f"index at {path} is not a hamming signature index "
-            f"(stored layout: {meta}) — probe fingerprint indexes with "
-            "incremental_dedup_indexed"
-        )
-    out = []
-    for name, given, default in (
-        ("bits", bits, 64),
-        ("max_hamming", max_hamming, 3),
-        ("buckets", buckets, 64),
-    ):
-        stored = meta.get(name)
-        if given is not None and stored is not None and given != stored:
-            raise ValueError(
-                f"hamming index at {path} was written with {name}="
-                f"{stored} but the caller passed {name}={given} — a "
-                "mismatch prunes the wrong partitions and silently "
-                "misses duplicates"
-            )
-        out.append(
-            given if given is not None
-            else (stored if stored is not None else default)
-        )
-    return tuple(out)
-
-
 def append_hamming_index(
     sigs: DataFrame,
     path: str,
@@ -1554,10 +1485,14 @@ def append_hamming_index(
     signatures append back so later batches dedup against them).
     Dynamic partition append into existing bucket directories; layout
     resolves from the stored metadata, contradictions raise."""
-    bits, max_hamming, buckets = _resolve_hamming_params(
-        path, bits, max_hamming, buckets
+    p = store_meta.resolve(
+        path, "hamming",
+        {"bits": bits, "max_hamming": max_hamming, "buckets": buckets},
+        HAMMING_DEFAULTS,
     )
-    _write_hamming_index(sigs, path, bits, max_hamming, buckets, "append")
+    _write_hamming_index(
+        sigs, path, p["bits"], p["max_hamming"], p["buckets"], "append"
+    )
 
 
 def hamming_dedup_indexed(
@@ -1587,9 +1522,12 @@ def hamming_dedup_indexed(
     """
     from pyspark import StorageLevel
 
-    bits, max_hamming, buckets = _resolve_hamming_params(
-        path, bits, max_hamming, buckets
+    p = store_meta.resolve(
+        path, "hamming",
+        {"bits": bits, "max_hamming": max_hamming, "buckets": buckets},
+        HAMMING_DEFAULTS,
     )
+    bits, max_hamming, buckets = p["bits"], p["max_hamming"], p["buckets"]
     bb = _hamming_chunks(batch_sigs, bits, max_hamming).withColumn(
         "bucket", F.pmod(F.hash("ci", "ck"), F.lit(buckets))
     )

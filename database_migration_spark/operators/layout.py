@@ -40,8 +40,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
+
 MAX_KEY_BITS = 62  # z-key must stay a nonnegative signed-64 value
-LAYOUT_META = "_layout_meta.json"
 
 
 def plan_zorder_bits(n_cols: int, bits: "int | None") -> int:
@@ -293,11 +294,7 @@ def _footer_rows(path: str) -> int:
 
 
 def _write_layout_meta(path: str, desc: dict) -> None:
-    import os
-
-    from database_migration_spark.functions.io import write_json_atomic
-
-    write_json_atomic(os.path.join(path, LAYOUT_META), desc)
+    store_meta.write(path, "layout", desc)
 
 
 def clean_pending_append(path: str, meta: "dict | None") -> "dict | None":
@@ -369,23 +366,13 @@ def zorder_append(
     from database_migration_spark.functions.io import _require_local
 
     _require_local(path)  # before the append writes (judge advisory r10)
-    meta = read_layout_meta(path)
-    if meta is None:
+    meta = store_meta.resolve(
+        path, "layout", {"cols": cols, "bits": bits}, {}
+    )
+    if "bounds" not in meta:  # every stored layout meta carries bounds
         raise ValueError(
-            f"no z-order layout at {path} ({LAYOUT_META} missing) — "
+            f"no z-order layout at {path} (its meta is missing) — "
             "create it with zorder_write / compact --zorder first"
-        )
-    if cols is not None and list(cols) != list(meta["cols"]):
-        raise ValueError(
-            f"layout at {path} is clustered on cols={meta['cols']} but "
-            f"the caller passed cols={list(cols)} — append with the "
-            "stored layout (pass None) or re-cluster with zorder_write"
-        )
-    if bits is not None and int(bits) != int(meta["bits"]):
-        raise ValueError(
-            f"layout at {path} stores bits={meta['bits']} but the "
-            f"caller passed bits={bits} — a different grid would mix "
-            "cell geometries in one layout"
         )
     meta = clean_pending_append(path, meta)
     bounds = {c: (int(v[0]), int(v[1])) for c, v in meta["bounds"].items()}
@@ -427,17 +414,6 @@ def zorder_append(
     _write_layout_meta(path, desc)
     shutil.rmtree(stage, ignore_errors=True)
     return desc
-
-
-def read_layout_meta(path: str) -> "dict | None":
-    import json
-    import os
-
-    p = os.path.join(path, LAYOUT_META)
-    if not os.path.exists(p):
-        return None
-    with open(p) as fh:
-        return json.load(fh)
 
 
 def file_span_stats(path: str, cols: list) -> list:

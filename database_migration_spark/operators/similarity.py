@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
 from database_migration_spark.functions.parallel import fan_out
 
 
@@ -1673,11 +1674,7 @@ def write_ivf_pq_index(
     metadata rule: a prober must never guess the writer's layout
     (cells × dim + m×k×d floats ≈ a few MB at hundreds of cells; store
     the geometry as parquet instead if you train 10⁵+ cells)."""
-    import os
-
     import numpy as np
-
-    from database_migration_spark.functions.io import write_json_atomic
 
     cent = np.asarray(coarse, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
@@ -1701,20 +1698,17 @@ def write_ivf_pq_index(
         "codebooks": books.tolist(),
     }
     meta.update(extra or {})
-    os.makedirs(path, exist_ok=True)
-    write_json_atomic(os.path.join(path, "_ann_meta.json"), meta)
+    store_meta.write(path, "ann", meta)
 
 
-def read_ann_meta(path: str):
+def _stored_geometry(path: str):
     """The stored IVF-PQ geometry of a :func:`write_ivf_pq_index` layout:
     ``(coarse, codebooks)`` numpy arrays."""
-    import json
-    import os
-
     import numpy as np
 
-    with open(os.path.join(path, "_ann_meta.json")) as fh:
-        meta = json.load(fh)
+    meta = store_meta.read(path, "ann")
+    if meta is None:
+        raise ValueError(f"no IVF-PQ index at {path} (its meta is missing)")
     return (
         np.asarray(meta["coarse"], dtype=np.float64),
         np.asarray(meta["codebooks"], dtype=np.float64),
@@ -1739,7 +1733,7 @@ def ivf_pq_topk_from_index(
     listing time. Search semantics are exactly :func:`ivf_pq_topk`."""
     import numpy as np
 
-    cent, books = read_ann_meta(path)
+    cent, books = _stored_geometry(path)
     qv = np.array(
         [r[1] for r in queries.select(id_col, vec_col).collect()],
         dtype=np.float64,
@@ -1780,7 +1774,7 @@ def append_ivf_pq_index(
     distribution drifts materially; the drift operators are the monitor).
     Dynamic partition append: each new row lands as a file inside its
     existing cell directory; compact per standard parquet hygiene."""
-    cent, books = read_ann_meta(path)
+    cent, books = _stored_geometry(path)
     ivf_pq_encode(corpus, cent, books, id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/codes")
@@ -1819,7 +1813,7 @@ def ivf_pq_index_drift(
     tv_ppm ≥ ~50_000 (5 % of mass in moved cells), rebuild when it keeps
     climbing.
     """
-    cent, _books = read_ann_meta(path)
+    cent, _books = _stored_geometry(path)
     idx = (
         spark.read.parquet(f"{path}/codes")
         .groupBy("cell")

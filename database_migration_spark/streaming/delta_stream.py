@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
 from database_migration_spark.operators.delta_sync import merge_upsert
 
 
@@ -356,8 +357,6 @@ def stream_scd2(
         affected_partitions,
         pt_expr,
         publish_partitions,
-        read_target_meta,
-        resolve_partitions,
         store_has_partitions,
         write_target_meta,
     )
@@ -369,7 +368,7 @@ def stream_scd2(
     # bootstrapped partitioned earlier and streamed with partitions=None
     # (review finding): the surgical branch runs scd2_merge with
     # close_missing=False.
-    stored = read_target_meta(dim_path)
+    stored = store_meta.read(dim_path, "target")
     if close_missing and (partitions is not None or stored is not None):
         raise ValueError(
             "close_missing touches every dimension key per epoch — "
@@ -390,7 +389,9 @@ def stream_scd2(
 
         s = batch.sparkSession
         ts = int(epoch_id) if batch_ts_of is None else batch_ts_of(epoch_id, batch)
-        n_pt = resolve_partitions(dim_path, keys, partitions)
+        n_pt = store_meta.resolve(
+            dim_path, "target", {"partitions": partitions, "keys": keys}, {}
+        )["partitions"]
         if n_pt is not None:
             # the batch feeds two consumers (touched-partition collect +
             # the merge) — persist for the epoch, unpersist in the
@@ -775,7 +776,6 @@ def stream_cdc_apply(
         PT_COL,
         pt_expr,
         publish_partitions,
-        resolve_partitions,
         store_has_partitions,
         write_target_meta,
     )
@@ -788,7 +788,10 @@ def stream_cdc_apply(
         from database_migration_spark.operators.cdc import net_changes
 
         s = batch.sparkSession
-        n_pt = resolve_partitions(target_path, keys, partitions)
+        n_pt = store_meta.resolve(
+            target_path, "target", {"partitions": partitions, "keys": keys},
+            {},
+        )["partitions"]
         net = net_changes(batch, keys, seq_col, op_col)
         base_cols = [c for c in batch.columns if c not in (seq_col, op_col)]
         rows = net.select(
@@ -903,13 +906,11 @@ def compact_cdc_target(
         PT_COL,
         publish_parquet,
         publish_partitions,
-        read_target_meta,
         store_has_partitions,
     )
 
-    if read_target_meta(target_path) is not None and not store_has_partitions(
-        target_path
-    ):
+    partitioned = store_meta.read(target_path, "target") is not None
+    if partitioned and not store_has_partitions(target_path):
         # a partitioned store can legally be empty (every key deleted and
         # compacted away) — nothing to do, and the parquet read below
         # would fail on the meta-only directory
@@ -917,7 +918,6 @@ def compact_cdc_target(
     t = spark.read.parquet(target_path)
     expired = F.col("_deleted") & (F.col("_seq") < F.lit(int(min_live_seq)))
     before = t.where(F.col("_deleted")).count()
-    partitioned = read_target_meta(target_path) is not None
     if partitioned:
         affected = sorted(
             r[0]
@@ -949,19 +949,13 @@ def _run_identity(checkpoint: str) -> str:
     a stored ``(run_id, last_epoch)`` fence from an earlier stream
     (ADVICE r11: the bare-epoch fence silently skipped a fresh stream's
     epoch 0 against a layout whose last committed epoch was 0)."""
-    import os
     import uuid
 
-    os.makedirs(checkpoint, exist_ok=True)
-    marker = os.path.join(checkpoint, "_zorder_run_id")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            return fh.read().strip()
-    rid = uuid.uuid4().hex[:16]
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(rid)
-    os.replace(tmp, marker)  # atomic: never a truncated identity
+    rid = store_meta.read(checkpoint, "run_id")
+    if rid is None:
+        rid = uuid.uuid4().hex[:16]
+        # the atomic commit: never a truncated identity
+        store_meta.write(checkpoint, "run_id", rid)
     return rid
 
 
@@ -1031,7 +1025,6 @@ def _zorder_epoch(
     """One epoch of ``stream_zorder_append`` — module-level so the
     fence/replay protocol is directly testable outside a live stream."""
     from database_migration_spark.operators.layout import (
-        read_layout_meta,
         zorder_append,
         zorder_write,
     )
@@ -1040,7 +1033,7 @@ def _zorder_epoch(
         return
     run_id = _run_identity(checkpoint)
     fence = {"run_id": run_id, "last_epoch": int(epoch_id)}
-    meta = read_layout_meta(layout_path)
+    meta = store_meta.read(layout_path, "layout")
     if meta is None:
         if cols is None:
             raise ValueError(

@@ -1,14 +1,18 @@
 #!/usr/bin/env python
-"""Parallel pytest runner — the full-suite gate in ~1/4 the wall clock.
+"""Parallel pytest runner — the full-suite gate in a fraction of the wall
+clock.
 
-The suite's cost is ~serial tiny-Spark-job latency, not CPU: a 32-core box
-running one local[8] session leaves 3/4 of the machine idle while jobs
-queue one at a time. pytest-xdist is not installable here, so this runner
-does the same thing at file granularity: greedy-pack the test FILES into N
-buckets by measured wall weight (heavy files first), run one `pytest`
-subprocess per bucket concurrently — each builds its own local[8]
-SparkSession — and aggregate exit codes. Zero tests are skipped or
-deleted; the surface is identical to `pytest tests/ -q`.
+The suite's cost is ~serial tiny-Spark-job latency, not CPU: one session
+leaves most of the machine idle while jobs queue one at a time.
+pytest-xdist is not a dependency, so this runner does the same thing at
+file granularity: greedy-pack the test FILES into N buckets by measured
+wall weight (heavy files first), run one `pytest` subprocess per bucket
+concurrently — each builds its own local[8] SparkSession (unless
+SPARK_GRAFT_CPUS is set) whose driver heap is the host default heap
+(`session.local_defaults()`) divided by N (unless SPARK_GRAFT_DRIVER_MEM
+is set), so the N heaps together fit what one session may take — and
+aggregate exit codes. Zero tests are skipped or deleted; the surface is
+identical to `pytest tests/ -q`.
 
 Isolation notes (why file granularity is safe here):
 - embedded-Derby DBs and parquet scratch live under per-test tmp_path;
@@ -29,7 +33,9 @@ import sys
 import time
 from pathlib import Path
 
-TESTS = Path(__file__).resolve().parent.parent / "tests"
+ROOT = Path(__file__).resolve().parent.parent
+TESTS = ROOT / "tests"
+sys.path.insert(0, str(ROOT))
 
 # measured wall seconds per file (round-8 `--durations` profile; files not
 # listed get DEFAULT_WEIGHT). Only used for packing balance — staleness
@@ -74,10 +80,15 @@ def main() -> int:
     files = sorted(TESTS.glob("test_*.py"))
     groups = pack(files, args.n)
     env = dict(os.environ)
-    # each worker gets a local[8] session: 4 x 8 = the 32-core box, and
-    # small sessions keep per-job latency low
+    # each worker gets a small local[8] session (small sessions keep
+    # per-job latency low) and an equal share of the host default heap:
+    # N full-size heaps would ask for N times what the host can back
     env.setdefault("SPARK_GRAFT_CPUS", "8")
-    env.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
+    if "SPARK_GRAFT_DRIVER_MEM" not in env:
+        from database_migration_spark.session import local_defaults
+
+        heap_mb = int(local_defaults()[1].rstrip("m"))
+        env["SPARK_GRAFT_DRIVER_MEM"] = f"{heap_mb // len(groups)}m"
 
     t0 = time.time()
     procs = []

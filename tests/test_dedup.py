@@ -595,9 +595,9 @@ def test_fingerprint_index_metadata_guards_layout(spark, tmp_path):
         append_fingerprint_index,
         fingerprint_store,
         incremental_dedup_indexed,
-        read_index_meta,
         write_fingerprint_index,
     )
+    from database_migration_spark.functions import store_meta
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon zeta eta theta doc {i}")
@@ -606,7 +606,9 @@ def test_fingerprint_index_metadata_guards_layout(spark, tmp_path):
     )
     path = str(tmp_path / "fpidx")
     write_fingerprint_index(fingerprint_store(docs, k=5), path, buckets=8)
-    assert read_index_meta(path) == {"num_perm": 32, "bands": 4, "buckets": 8}
+    assert store_meta.read(path, "minhash") == {
+        "num_perm": 32, "bands": 4, "buckets": 8,
+    }
 
     batch = spark.createDataFrame(
         [(100, "alpha beta gamma delta epsilon zeta eta theta doc 3")],

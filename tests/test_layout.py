@@ -7,6 +7,8 @@ bounds only its own."""
 import pytest
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
+
 from database_migration_spark.operators.layout import (
     column_bounds,
     file_span_stats,
@@ -108,10 +110,8 @@ def test_zorder_write_bounds_every_dim_where_sort_bounds_one(
     assert desc["bits"] == 16 and desc["n_files"] == 16
     # the layout descriptor is persisted with the data (descriptive —
     # pruning reads the parquet footers, not this)
-    from database_migration_spark.operators.layout import read_layout_meta
-
-    assert read_layout_meta(zpath) == desc
-    assert read_layout_meta(str(tmp_path)) is None
+    assert store_meta.read(zpath, "layout") == desc
+    assert store_meta.read(str(tmp_path), "layout") is None
 
     spath = str(tmp_path / "sorted_a")
     (
@@ -176,10 +176,7 @@ def test_zorder_validation(spark):
 def test_zorder_append_keeps_clustering_and_raises_on_contradiction(
     spark, tmp_path
 ):
-    from database_migration_spark.operators.layout import (
-        read_layout_meta,
-        zorder_append,
-    )
+    from database_migration_spark.operators.layout import zorder_append
 
     rows = [(i, (i * 7919) % 10_000, (i * 104729) % 10_000)
             for i in range(20_000)]
@@ -196,7 +193,7 @@ def test_zorder_append_keeps_clustering_and_raises_on_contradiction(
     )
     desc = zorder_append(batch, path)
     assert desc["rows"] == 22_500 and desc["n_files"] == 18
-    assert read_layout_meta(path) == desc
+    assert store_meta.read(path, "layout") == desc
     assert spark.read.parquet(path).count() == 22_500
     # every file — original or appended — keeps bounded spans on both
     # keyed columns (same cell grid)
@@ -251,11 +248,7 @@ def test_zorder_append_resolves_pre_rows_meta(spark, tmp_path):
     import json
     import os
 
-    from database_migration_spark.operators.layout import (
-        LAYOUT_META,
-        read_layout_meta,
-        zorder_append,
-    )
+    from database_migration_spark.operators.layout import zorder_append
 
     df = spark.createDataFrame(
         [(i, i % 100, (i * 7) % 100) for i in range(2_000)],
@@ -263,9 +256,9 @@ def test_zorder_append_resolves_pre_rows_meta(spark, tmp_path):
     )
     path = str(tmp_path / "old")
     zorder_write(df, path, ["a", "b"], n_files=4)
-    meta = read_layout_meta(path)
+    meta = store_meta.read(path, "layout")
     del meta["rows"]  # simulate the pre-rows artifact
-    with open(os.path.join(path, LAYOUT_META), "w") as fh:
+    with open(os.path.join(path, "_layout_meta.json"), "w") as fh:
         json.dump(meta, fh)
     batch = spark.createDataFrame(
         [(9_000 + i, 5, 5) for i in range(100)], "id LONG, a LONG, b LONG"
@@ -301,10 +294,7 @@ def test_layout_meta_records_actual_file_count(spark, tmp_path):
     partitions collapse to 1 real file."""
     import os
 
-    from database_migration_spark.operators.layout import (
-        read_layout_meta,
-        zorder_append,
-    )
+    from database_migration_spark.operators.layout import zorder_append
 
     df = spark.createDataFrame(
         [(i, 5, 5) for i in range(1_000)], "id LONG, a LONG, b LONG"
@@ -328,7 +318,7 @@ def test_layout_meta_records_actual_file_count(spark, tmp_path):
         1 for n in os.listdir(path) if n.endswith(".parquet")
     )
     assert desc2["n_files"] == on_disk2
-    assert read_layout_meta(path)["n_files"] == on_disk2
+    assert store_meta.read(path, "layout")["n_files"] == on_disk2
 
 
 def test_storage_stats_reads_footers_and_layout_compresses(spark, tmp_path):
@@ -411,7 +401,7 @@ def test_zorder_append_crash_before_pending_meta(spark, tmp_path,
     from database_migration_spark.operators import layout as L
 
     path = _small_layout(spark, tmp_path)
-    before = L.read_layout_meta(path)
+    before = store_meta.read(path, "layout")
 
     real = L._write_layout_meta
 
@@ -425,12 +415,12 @@ def test_zorder_append_crash_before_pending_meta(spark, tmp_path,
         L.zorder_append(_batch(spark), path, pending_id="e1")
     monkeypatch.undo()
 
-    assert L.read_layout_meta(path) == before  # meta untouched
+    assert store_meta.read(path, "layout") == before  # meta untouched
     assert spark.read.parquet(path).count() == 4_000  # no orphan rows read
     desc = L.zorder_append(_batch(spark), path, pending_id="e1")
     assert desc["rows"] == 4_500
     assert spark.read.parquet(path).count() == 4_500
-    assert "pending" not in L.read_layout_meta(path)
+    assert "pending" not in store_meta.read(path, "layout")
 
 
 def test_zorder_append_crash_between_rename_and_commit(spark, tmp_path,
@@ -458,7 +448,7 @@ def test_zorder_append_crash_between_rename_and_commit(spark, tmp_path,
         L.zorder_append(_batch(spark), path, pending_id="e2")
     monkeypatch.undo()
 
-    meta = L.read_layout_meta(path)
+    meta = store_meta.read(path, "layout")
     assert meta["pending"]["id"] == "e2"  # the orphan record survived
     orphans = [
         os.path.join(path, n) for n in meta["pending"]["files"]
@@ -469,7 +459,7 @@ def test_zorder_append_crash_between_rename_and_commit(spark, tmp_path,
     desc = L.zorder_append(_batch(spark), path, pending_id="e2")
     assert desc["rows"] == 4_500
     assert spark.read.parquet(path).count() == 4_500
-    assert "pending" not in L.read_layout_meta(path)
+    assert "pending" not in store_meta.read(path, "layout")
 
 
 def test_zorder_append_crash_during_rename_in(spark, tmp_path,
@@ -499,7 +489,7 @@ def test_zorder_append_crash_during_rename_in(spark, tmp_path,
         L.zorder_append(big, path, pending_id="e3")
     monkeypatch.undo()
 
-    meta = L.read_layout_meta(path)
+    meta = store_meta.read(path, "layout")
     assert meta["pending"]["id"] == "e3"
     desc = L.zorder_append(big, path, pending_id="e3")
     assert desc["rows"] == 6_500

@@ -3,6 +3,8 @@
 import pytest
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
+
 
 @pytest.fixture()
 def event_files(spark, tmp_path):
@@ -1185,10 +1187,12 @@ def test_cdc_partition_layout_contradictions_raise(spark, tmp_path):
     unpartitioned store) raise instead of silently mis-pruning."""
     import pytest
 
-    from database_migration_spark.functions.io import (
-        resolve_partitions,
-        write_target_meta,
-    )
+    from database_migration_spark.functions.io import write_target_meta
+
+    def resolve_partitions(path, keys, partitions):
+        return store_meta.resolve(
+            path, "target", {"partitions": partitions, "keys": keys}, {}
+        )["partitions"]
 
     p = str(tmp_path / "store")
     spark.createDataFrame([(1,)], "k LONG").write.parquet(p)
@@ -1408,10 +1412,7 @@ def test_stream_zorder_append_builds_clustered_layout(spark, tmp_path):
     the grid, later epochs append ON that grid — all rows land, spans
     stay bounded on BOTH keyed columns across old+new files, the stored
     meta carries the epoch fence, and a contradictory grid raises."""
-    from database_migration_spark.operators.layout import (
-        read_layout_meta,
-        zorder_span_report,
-    )
+    from database_migration_spark.operators.layout import zorder_span_report
     from database_migration_spark.streaming.delta_stream import (
         stream_zorder_append,
     )
@@ -1443,7 +1444,7 @@ def test_stream_zorder_append_builds_clustered_layout(spark, tmp_path):
 
     out = spark.read.parquet(layout)
     assert out.count() == 60_000
-    meta = read_layout_meta(layout)
+    meta = store_meta.read(layout, "layout")
     assert meta["cols"] == ["u", "e"] and meta["rows"] == 60_000
     assert meta["last_epoch"] >= 2  # the fence rode the meta
     rep = zorder_span_report(layout, ["u", "e"])
@@ -1473,7 +1474,6 @@ def test_zorder_epoch_fence_run_identity(spark, tmp_path):
     ids restart at 0 appends against a layout whose stored last_epoch
     is 0 (ADVICE r11: the bare-epoch fence silently skipped that
     batch)."""
-    from database_migration_spark.operators.layout import read_layout_meta
     from database_migration_spark.streaming.delta_stream import (
         _run_identity,
         _zorder_epoch,
@@ -1488,7 +1488,7 @@ def test_zorder_epoch_fence_run_identity(spark, tmp_path):
     # stream A commits ONLY its bootstrap epoch 0 (the collision setup)
     _zorder_epoch(batch, 0, layout, ckpt_a, ["u", "e"], None, 4)
     assert spark.read.parquet(layout).count() == 2_000
-    meta = read_layout_meta(layout)
+    meta = store_meta.read(layout, "layout")
     assert meta["last_epoch"] == 0 and meta["run_id"]
 
     # replay of the SAME epoch from the SAME checkpoint: skipped
@@ -1499,7 +1499,7 @@ def test_zorder_epoch_fence_run_identity(spark, tmp_path):
     ckpt_b = str(tmp_path / "ckpt_b")
     _zorder_epoch(batch, 0, layout, ckpt_b, None, None, 4)
     assert spark.read.parquet(layout).count() == 4_000
-    meta2 = read_layout_meta(layout)
+    meta2 = store_meta.read(layout, "layout")
     assert meta2["run_id"] != meta["run_id"]
 
     # run identity is stable across calls for one checkpoint
@@ -1544,7 +1544,7 @@ def test_zorder_epoch_replay_after_crash_no_double_write(
     got = spark.read.parquet(layout)
     assert got.count() == 2_000
     assert got.select("id").distinct().count() == 2_000
-    meta = L.read_layout_meta(layout)
+    meta = store_meta.read(layout, "layout")
     assert meta["last_epoch"] == 1 and "pending" not in meta
 
 
@@ -1642,7 +1642,6 @@ def test_zorder_epoch_legacy_meta_replay_skips(spark, tmp_path):
     import json
     import os
 
-    from database_migration_spark.operators.layout import read_layout_meta
     from database_migration_spark.streaming.delta_stream import (
         _zorder_epoch,
     )
@@ -1655,7 +1654,7 @@ def test_zorder_epoch_legacy_meta_replay_skips(spark, tmp_path):
     )
     _zorder_epoch(batch, 3, layout, ckpt, ["u", "e"], None, 4)
     # strip the run identity: the pre-round-12 meta shape
-    meta = read_layout_meta(layout)
+    meta = store_meta.read(layout, "layout")
     del meta["run_id"]
     with open(os.path.join(layout, "_layout_meta.json"), "w") as fh:
         json.dump(meta, fh)
@@ -1666,4 +1665,4 @@ def test_zorder_epoch_legacy_meta_replay_skips(spark, tmp_path):
     # a different epoch still appends (and records the new run id)
     _zorder_epoch(batch, 4, layout, ckpt, None, None, 4)
     assert spark.read.parquet(layout).count() == 2_000
-    assert read_layout_meta(layout)["run_id"]
+    assert store_meta.read(layout, "layout")["run_id"]
