@@ -197,11 +197,11 @@ def cmd_validate(args) -> int:
         bad += 1
 
     def compare(k):
-        cmp, uncompared = validate_pair(
+        rows, uncompared = validate_pair(
             lread[lfold[k]](), rread[rfold[k]](), lfold[k],
             distinct_mode=args.distinct_mode,
         )
-        return cmp.filter(cmp.status == "DEVIATION").collect(), uncompared
+        return [r for r in rows if r.status == "DEVIATION"], uncompared
 
     # tables compare concurrently; the report prints in table order
     for k, (dev, uncompared) in zip(keys, map_tables(spark, compare, keys)):
@@ -529,7 +529,8 @@ def cmd_layout(args) -> int:
                   f"(columns: {df.columns})", file=sys.stderr)
             return 2
         try:
-            desc = zorder_append(df, args.target, cols=cols, bits=args.bits)
+            desc = zorder_append(df, args.target, cols=cols, bits=args.bits,
+                                 meta=meta)
         except ValueError as e:
             # grid contradictions and non-local targets name their fix
             print(f"error: {e}", file=sys.stderr)
@@ -1317,10 +1318,7 @@ def cmd_star(args) -> int:
         build_dimension,
         build_fact,
     )
-    from database_migration_spark.operators.validate import (
-        compare_metrics,
-        compute_metrics,
-    )
+    from database_migration_spark.operators.validate import validate_pair
     from database_migration_spark.session import get_spark
 
     spark = get_spark(app_name="dms_star")
@@ -1419,12 +1417,9 @@ def cmd_star(args) -> int:
             d = spark.read.parquet(os.path.join(args.target, f"{name}.parquet"))
             rec = rec.join(d, f"{name}_key", "left")
         flat_cols = fact_ids + sorted(dim_cols_all) + measures
-        ours = compute_metrics(flat.select(*flat_cols), args.table)
-        theirs = compute_metrics(rec.select(*flat_cols), args.table)
-        cmp_rows = (
-            compare_metrics(ours, theirs)
-            .orderBy("column_name", "metric")
-            .collect()
+        # the rows come sorted by column, then metric
+        cmp_rows, _same_cols = validate_pair(
+            flat.select(*flat_cols), rec.select(*flat_cols), args.table
         )
         bad = [r for r in cmp_rows if r.status != "OK"]
         for r in bad:
@@ -2508,7 +2503,8 @@ def cmd_ann(args) -> int:
             args.id_col, args.vec_col
         )
         rep = ivf_pq_index_drift(spark, args.index, corpus,
-                                 id_col=args.id_col, vec_col=args.vec_col)
+                                 id_col=args.id_col, vec_col=args.vec_col,
+                                 meta=meta)
         print(json.dumps(rep))
         # the drift operators' alert convention: ~5% of mass in moved
         # cells warrants attention; exit 1 so CI can gate on it
@@ -2530,7 +2526,8 @@ def cmd_ann(args) -> int:
         )
         n = corpus.count()
         append_ivf_pq_index(corpus, args.index,
-                            id_col=args.id_col, vec_col=args.vec_col)
+                            id_col=args.id_col, vec_col=args.vec_col,
+                            meta=meta)
         print(f"appended {n} vectors to {args.index} "
               "(stored geometry; rebuild when the distribution drifts)")
         return 0
@@ -2548,6 +2545,7 @@ def cmd_ann(args) -> int:
     out = S.ivf_pq_topk_from_index(
         spark, args.index, q, k=args.k, n_probe=n_probe,
         rerank=args.rerank, id_col=args.id_col, vec_col=args.vec_col,
+        meta=meta,
     )
     from pyspark import StorageLevel
 

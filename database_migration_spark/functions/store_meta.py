@@ -76,7 +76,9 @@ def write(path: str, kind: str, meta) -> None:
     os.replace(tmp, final)
 
 
-def resolve(path: str, kind: str, given: dict, defaults: dict) -> dict:
+def resolve(
+    path: str, kind: str, given: dict, defaults: dict, stored=None
+) -> dict:
     """Resolve each name in ``given`` against the ``kind`` meta at
     ``path``: a value of ``None`` takes the stored value, else
     ``defaults[name]`` (None when absent); an explicit value must equal
@@ -89,10 +91,13 @@ def resolve(path: str, kind: str, given: dict, defaults: dict) -> dict:
     missing from a stored meta does too, unless its absence has a meaning
     (``_IMPLIED``).
 
+    ``stored`` is the meta a caller already read from ``path`` (with
+    :func:`read`), so a command parses the file once; None reads it.
+
     Returns the stored meta (``{}`` when there is none) with each name
     of ``given`` set to its resolved value."""
     name, label = KINDS[kind]
-    meta = _load(path, kind)
+    meta = _load(path, kind) if stored is None else stored
     if (meta is None and kind == "target"
             and given.get("partitions") is not None and os.path.isdir(path)):
         raise ValueError(

@@ -283,15 +283,21 @@ def sync_table(
     publish_parquet(merged, path, path.rstrip("/") + ".sync-tmp")
 
     fresh = spark.read.parquet(path)
-    rows_after = fresh.count()
-    deviations: int | None = None
-    uncompared: tuple[str, ...] = ()
-    if validate:
-        from database_migration_spark.operators.validate import validate_pair
+    if not validate:
+        return SyncReport(meta.table, plan, fresh.count(), None)
+    from database_migration_spark.operators.validate import (
+        METRIC_ROW_CNT,
+        validate_pair,
+    )
 
-        cmp, unc = validate_pair(
-            source, fresh, meta.table, distinct_mode=distinct_mode
-        )
-        deviations = cmp.filter(F.col("status") == "DEVIATION").count()
-        uncompared = tuple(unc)
-    return SyncReport(meta.table, plan, rows_after, deviations, uncompared)
+    # one Spark action: the target's ROW_CNT metric is rows_after
+    rows, unc = validate_pair(
+        source, fresh, meta.table, distinct_mode=distinct_mode
+    )
+    return SyncReport(
+        meta.table,
+        plan,
+        int(next(r.value_b for r in rows if r.metric == METRIC_ROW_CNT)),
+        sum(r.status == "DEVIATION" for r in rows),
+        tuple(unc),
+    )

@@ -335,6 +335,7 @@ def zorder_append(
     bits: "int | None" = None,
     pending_id: "str | None" = None,
     extra_meta: "dict | None" = None,
+    meta: "dict | None" = None,
 ) -> dict:
     """Grow a z-ordered layout incrementally: cluster the batch with the
     STORED bounds/bits (``_layout_meta.json`` — the stored-layout rule:
@@ -358,7 +359,8 @@ def zorder_append(
     files the next append — or a replayed epoch — deletes via
     ``clean_pending_append`` instead of double-counting. ``pending_id``
     names the stage dir (a replayed epoch must target the SAME one);
-    defaults to a fresh unique id for batch callers."""
+    defaults to a fresh unique id for batch callers. ``meta`` is the
+    layout meta a caller already read from ``path``; None reads it."""
     import os
     import shutil
     import uuid
@@ -367,7 +369,7 @@ def zorder_append(
 
     _require_local(path)  # before the append writes (judge advisory r10)
     meta = store_meta.resolve(
-        path, "layout", {"cols": cols, "bits": bits}, {}
+        path, "layout", {"cols": cols, "bits": bits}, {}, meta
     )
     if "bounds" not in meta:  # every stored layout meta carries bounds
         raise ValueError(

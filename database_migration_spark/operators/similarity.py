@@ -1701,12 +1701,14 @@ def write_ivf_pq_index(
     store_meta.write(path, "ann", meta)
 
 
-def _stored_geometry(path: str):
+def _stored_geometry(path: str, meta: "dict | None" = None):
     """The stored IVF-PQ geometry of a :func:`write_ivf_pq_index` layout:
-    ``(coarse, codebooks)`` numpy arrays."""
+    ``(coarse, codebooks)`` numpy arrays, from ``meta`` when the caller
+    already read the index's meta, else from the file."""
     import numpy as np
 
-    meta = store_meta.read(path, "ann")
+    if meta is None:
+        meta = store_meta.read(path, "ann")
     if meta is None:
         raise ValueError(f"no IVF-PQ index at {path} (its meta is missing)")
     return (
@@ -1724,16 +1726,18 @@ def ivf_pq_topk_from_index(
     rerank: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    meta: "dict | None" = None,
 ) -> DataFrame:
     """IVF-PQ top-k against a :func:`write_ivf_pq_index` layout. Geometry
-    resolves from the index's stored metadata (never from caller guesses);
+    resolves from the index's stored metadata (never from caller guesses;
+    ``meta`` is that metadata when the caller already read it);
     the query batch's probed cells become a static ``cell IN (...)``
     predicate on BOTH partitioned relations, so the ADC scan AND the
     rerank's vector fetch prune to n_probe/n_centroids of the files at
     listing time. Search semantics are exactly :func:`ivf_pq_topk`."""
     import numpy as np
 
-    cent, books = _stored_geometry(path)
+    cent, books = _stored_geometry(path, meta)
     qv = np.array(
         [r[1] for r in queries.select(id_col, vec_col).collect()],
         dtype=np.float64,
@@ -1764,17 +1768,18 @@ def append_ivf_pq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    meta: "dict | None" = None,
 ) -> None:
     """Grow a :func:`write_ivf_pq_index` layout with new vectors — the
     recurring-ingest step (the fingerprint-index append's vector sibling).
-    Geometry resolves from the index's stored ``_ann_meta.json``, NEVER
-    from caller guesses: appended vectors are encoded with the ORIGINAL
+    Geometry resolves from the index's stored ``_ann_meta.json`` (``meta``
+    when the caller already read it), NEVER from caller guesses: appended vectors are encoded with the ORIGINAL
     coarse centroids and residual codebooks, so probes stay consistent
     (the standard IVF practice — retrain and rebuild when the embedding
     distribution drifts materially; the drift operators are the monitor).
     Dynamic partition append: each new row lands as a file inside its
     existing cell directory; compact per standard parquet hygiene."""
-    cent, books = _stored_geometry(path)
+    cent, books = _stored_geometry(path, meta)
     ivf_pq_encode(corpus, cent, books, id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/codes")
@@ -1795,6 +1800,7 @@ def ivf_pq_index_drift(
     corpus: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    meta: "dict | None" = None,
 ) -> dict:
     """The rebuild trigger for an append-grown IVF-PQ index: total-
     variation distance (exact integer ppm) between the INDEX's cell-
@@ -1811,9 +1817,10 @@ def ivf_pq_index_drift(
     relation (cell only) + one corpus assignment pass — no vectors move.
     Guidance from the drift operators' convention: alert around
     tv_ppm ≥ ~50_000 (5 % of mass in moved cells), rebuild when it keeps
-    climbing.
+    climbing. ``meta`` is the index's stored meta when the caller
+    already read it.
     """
-    cent, _books = _stored_geometry(path)
+    cent, _books = _stored_geometry(path, meta)
     idx = (
         spark.read.parquet(f"{path}/codes")
         .groupBy("cell")

@@ -9,11 +9,17 @@ sides into a per-schema comparison with STATUS OK/DEVIATION
 "single scan" comment at :249-252; /root/reference/oracle_to_exasol.sql:587-802
 adds AVG / MEDIAN / mode).
 
-Spark shape: ``df.agg(*all_exprs)`` — one scan, map-side partial aggregation
-and whole-stage codegen for free — then a ``stack()`` unpivot of the 1-row
-wide result and an equi-join comparison. Metric values are normalized to
-strings the same way on both systems (DECIMAL-stringified numerics,
-to-the-second timestamps) so a faithful copy yields ZERO deviation rows.
+Spark shape: :func:`validate_pair` unions both sides under a ``__side`` tag
+and runs ONE aggregate grouped by side — one scan per side, map-side
+partial aggregation and whole-stage codegen for free, one Spark action per
+table — then diffs the two collected metric rows on the driver. A column
+whose type differs between the sides travels as two union columns, so each
+side keeps its own type (a union would widen it). :func:`compute_metrics`
+and :func:`compare_metrics` keep the lazy single-relation form (wide row,
+``stack()`` unpivot, full outer join) for queries that must stay
+DataFrames. Metric values are normalized to strings the same way on both
+systems (DECIMAL-stringified numerics, to-the-second timestamps) so a
+faithful copy yields ZERO deviation rows.
 
 Scale note: exact COUNT(DISTINCT) over many columns in one aggregate uses
 Spark's Expand (one duplicated stream per distinct aggregate). At 100 TB
@@ -23,7 +29,7 @@ for monitoring; exact mode is for migration sign-off where equality matters.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,7 +84,7 @@ def metric_exprs(
 
     Output column naming: ``<metric>__<column>`` (ROW_CNT has no column).
     """
-    cols = columns or df.columns
+    cols = df.columns if columns is None else columns
     schema = {f.name: f.dataType for f in df.schema.fields}
     exprs: list[str] = ["string(count(1)) AS `ROW_CNT__`"]
     distinct_exprs: list[str] = []
@@ -323,32 +329,102 @@ def mode_metric(df: DataFrame, column: str) -> DataFrame:
     )
 
 
+COMPARISON_SCHEMA = (
+    "table_name STRING, column_name STRING, metric STRING, "
+    "value_a STRING, value_b STRING, status STRING"
+)
+_Comparison = Row(
+    "table_name", "column_name", "metric", "value_a", "value_b", "status"
+)
+# the count metrics: a global aggregate over an empty relation yields 0
+# for these and NULL for every other metric
+_COUNTS = (METRIC_ROW_CNT, METRIC_NULLS, METRIC_DISTINCT)
+
+
 def validate_pair(
     left: DataFrame,
     right: DataFrame,
     table: str,
     distinct_mode: str = "exact",
-) -> tuple[DataFrame, list[str]]:
+) -> tuple[list[Row], list[str]]:
     """Metric-diff two relations of the same table on their COMMON columns.
 
-    Returns ``(comparison, uncompared)`` — the OK/DEVIATION rows plus the
-    columns present on only one side. Callers MUST surface ``uncompared``:
-    a structurally missing column is a deviation the metric join cannot
-    see (it only compares what both sides have), and silently shrinking
-    the comparison surface is how a cutover gate passes a broken target.
-    Shared by MigrationRunner.execute and the ``validate`` CLI so the two
-    stay behaviorally identical.
+    Returns ``(comparison, uncompared)``: the OK/DEVIATION rows
+    (:data:`COMPARISON_SCHEMA` fields, sorted by column then metric, so
+    ROW_CNT with its empty column name comes first) plus the columns
+    present on only one side. The rows equal
+    ``compare_metrics(compute_metrics(l), compute_metrics(r))``, computed
+    by ONE Spark action: both sides are unioned under a ``__side`` tag
+    (0 = left, 1 = right), fanned once in exact mode, aggregated grouped
+    by side (the plain metrics joined on ``__side`` to the distinct ones,
+    so Expand carries only the counted columns), and the two collected
+    rows compare on the driver with null-safe equality. Union columns are
+    positional (``c<i>``), so no source name collides with ``__side``; a
+    common column whose Spark type differs between the sides travels as
+    two (``c<i>s0``/``c<i>s1``, each side's under its own type, NULL on
+    the other), because the union would widen the type and re-normalize
+    the narrower side. A side with no rows has no group and reads as an
+    empty relation's global aggregate: the counts "0", the rest NULL.
+
+    Callers MUST surface ``uncompared``: a structurally missing column is
+    a deviation the metric diff cannot see (it only compares what both
+    sides have), and silently shrinking the comparison surface is how a
+    cutover gate passes a broken target. Shared by MigrationRunner.execute,
+    ``sync_table`` and the ``validate`` CLI so they stay behaviorally
+    identical.
     """
+    from database_migration_spark.functions.parallel import fan_out
+
     rset, lset = set(right.columns), set(left.columns)
     common = [c for c in left.columns if c in rset]
     uncompared = [c for c in left.columns if c not in rset] + [
         c for c in right.columns if c not in lset
     ]
-    cmp = compare_metrics(
-        compute_metrics(left.select(common), table, distinct_mode=distinct_mode),
-        compute_metrics(right.select(common), table, distinct_mode=distinct_mode),
-    )
-    return cmp, uncompared
+    ltype = {f.name: f.dataType for f in left.schema.fields}
+    rtype = {f.name: f.dataType for f in right.schema.fields}
+    lsel, rsel = [F.lit(0).alias("__side")], [F.lit(1).alias("__side")]
+    # union column -> (source column, the side whose metrics it carries)
+    owner: dict[str, tuple[str, int | None]] = {}
+    for i, c in enumerate(common):
+        src = F.col(f"`{c}`")
+        if ltype[c] == rtype[c]:
+            owner[f"c{i}"] = (c, None)
+            lsel.append(src.alias(f"c{i}"))
+            rsel.append(src.alias(f"c{i}"))
+        else:
+            owner[f"c{i}s0"], owner[f"c{i}s1"] = (c, 0), (c, 1)
+            lsel += [src.alias(f"c{i}s0"),
+                     F.lit(None).cast(rtype[c]).alias(f"c{i}s1")]
+            rsel += [F.lit(None).cast(ltype[c]).alias(f"c{i}s0"),
+                     src.alias(f"c{i}s1")]
+    both = left.select(*lsel).union(right.select(*rsel))
+    plain, distinct = metric_exprs(both, list(owner), distinct_mode)
+    if distinct:
+        # as compute_metrics_wide: both aggregates read one fanned exchange
+        both = fan_out(both)
+        wide = both.groupBy("__side").agg(*plain).join(
+            both.groupBy("__side").agg(*distinct), "__side"
+        )
+    else:
+        wide = both.groupBy("__side").agg(*plain)
+    got = {r["__side"]: r for r in wide.collect()}
+
+    # (column, metric) -> [value_a, value_b]; a metric only one side's type
+    # has keeps NULL on the other, as the full outer join does
+    pairs: dict[tuple[str, str], list] = {}
+    for field in wide.columns[1:]:
+        metric, _, ucol = field.partition("__")
+        column, only = owner.get(ucol, ("", None))  # ROW_CNT: no column
+        for side in ((0, 1) if only is None else (only,)):
+            row = got.get(side)
+            value = (row[field] if row is not None
+                     else "0" if metric in _COUNTS else None)
+            pairs.setdefault((column, metric), [None, None])[side] = value
+    return [
+        _Comparison(table, column, metric, a, b,
+                    "OK" if a == b else "DEVIATION")
+        for (column, metric), (a, b) in sorted(pairs.items())
+    ], uncompared
 
 
 # ---------------------------------------------------------------------------

@@ -11,10 +11,11 @@ expect zero deviations. This module is that loop for Spark:
 
 Planning is pure (no cluster work beyond a catalog scan); execution streams
 each table source→target with the per-column transfer projection; validation
-computes the metric wide-rows on BOTH sides and diffs them. Tables are
-independent, so execution runs them concurrently on a driver thread pool
-bounded by min(tables, default parallelism, host cores) — the reference's
-parallel imports (PARALLEL_STATEMENTS). Every step logs to the JobLogger (the
+computes the metric rows of BOTH sides in one grouped aggregate and diffs
+them on the driver. Tables are independent, so execution runs them
+concurrently on a driver thread pool bounded by min(tables, default
+parallelism, host cores) — the reference's parallel imports
+(PARALLEL_STATEMENTS). Every step logs to the JobLogger (the
 ETL.QUERY_WRAPPER analogue, delta_import:326-332).
 """
 
@@ -28,7 +29,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from database_migration_spark.catalog import Catalog
 from database_migration_spark.functions.parallel import map_tables
-from database_migration_spark.operators.validate import validate_pair
+from database_migration_spark.operators.validate import (
+    COMPARISON_SCHEMA,
+    METRIC_ROW_CNT,
+    validate_pair,
+)
 from database_migration_spark.plans.ddl import generate_migration_plan
 from database_migration_spark.plans.statement_stream import MigrationPlan
 from database_migration_spark.typemap import TypeMapPolicy, map_columns
@@ -42,16 +47,20 @@ class JobLogger:
         self.rows: list[dict] = []
         self._t0 = time.time()
 
-    def log(self, step: str, status: str, detail: str = "", rows: int | None = None):
-        self.rows.append(
-            {
-                "elapsed_s": round(time.time() - self._t0, 3),
-                "step": step,
-                "status": status,
-                "detail": detail[:500],
-                "rows": rows,
-            }
-        )
+    def log(
+        self, step: str, status: str, detail: str = "", rows: int | None = None
+    ) -> dict:
+        """Append one row and return it, so a step whose row count is
+        known only later can fill in ``rows``."""
+        row = {
+            "elapsed_s": round(time.time() - self._t0, 3),
+            "step": step,
+            "status": status,
+            "detail": detail[:500],
+            "rows": rows,
+        }
+        self.rows.append(row)
+        return row
 
     def to_df(self, spark: SparkSession) -> DataFrame:
         return spark.createDataFrame(
@@ -143,16 +152,20 @@ class MigrationRunner:
         """Copy (and by default validate) every catalog table into
         ``target_dir``.
 
-        Each table's read → write → count → metric diff is one independent
-        task; the tasks run concurrently through
+        Each table's read → write → metric diff is one independent task;
+        the tasks run concurrently through
         :func:`~database_migration_spark.functions.parallel.map_tables`
         (at most min(tables, default parallelism, host cores) at once), so
         one table's small jobs overlap another's instead of leaving cores
-        idle between stages. ``report.tables`` stays in (schema, table)
-        order and each table logs its ``read``/``copy``/``validate`` rows
-        in that order; the first table that raises aborts the run with its
-        exception. ``report.validation`` holds the collected comparison
-        rows as a driver-local DataFrame: reading it runs no metric scan.
+        idle between stages. The metric diff is one Spark action
+        (:func:`~database_migration_spark.operators.validate.validate_pair`),
+        and ``rows_copied`` is the target's ROW_CNT from it; with
+        ``validate=False`` a count of the target gives it instead.
+        ``report.tables`` stays in (schema, table) order and each table
+        logs its ``read``/``copy``/``validate`` rows in that order; the
+        first table that raises aborts the run with its exception.
+        ``report.validation`` holds the comparison rows as a driver-local
+        DataFrame: reading it runs no metric scan.
         """
         # a table name in several schemas would write to the SAME target
         # path, the later copy silently replacing the earlier — those
@@ -185,42 +198,46 @@ class MigrationRunner:
                 target_path = f"{target_dir}/{t.table}"
             src.write.mode("overwrite").parquet(target_path)
             tgt = self.spark.read.parquet(target_path)
-            n = tgt.count()
-            self.logger.log(f"copy {t.table}", "done", qualified, rows=n)
-
-            cmp_schema, rows, dev = None, [], 0
-            if validate:
-                # sidecar columns the portable reader adds (ts_ns) exist on
-                # both sides here, but a JDBC source would not have them —
-                # validate_pair compares the intersection and reports the
-                # rest, which we surface as warnings (the copy above wrote
-                # every selected column, so a one-sided column is reader
-                # asymmetry, not data loss)
-                cmp, uncompared = validate_pair(
-                    src, tgt, t.table, distinct_mode=distinct_mode
-                )
-                warnings.extend(
-                    f"{t.table}.{c}: present on one side only — not metric-compared"
-                    for c in uncompared
-                )
-                cmp_schema, rows = cmp.schema, cmp.collect()
-                dev = sum(r.status == "DEVIATION" for r in rows)
-                self.logger.log(
-                    f"validate {t.table}",
-                    "ok" if dev == 0 else "DEVIATION",
-                    qualified,
-                    rows=dev,
-                )
-            return TableReport(t.table, n, dev, warnings), cmp_schema, rows
+            if not validate:
+                n = tgt.count()
+                self.logger.log(f"copy {t.table}", "done", qualified, rows=n)
+                return TableReport(t.table, n, 0, warnings), []
+            # the copy's row count is the target's ROW_CNT metric: the copy
+            # row is logged when the write ends and gets its count below,
+            # so counting the target runs no job of its own
+            copied = self.logger.log(f"copy {t.table}", "done", qualified)
+            # sidecar columns the portable reader adds (ts_ns) exist on
+            # both sides here, but a JDBC source would not have them —
+            # validate_pair compares the intersection and reports the
+            # rest, which we surface as warnings (the copy above wrote
+            # every selected column, so a one-sided column is reader
+            # asymmetry, not data loss)
+            rows, uncompared = validate_pair(
+                src, tgt, t.table, distinct_mode=distinct_mode
+            )
+            warnings.extend(
+                f"{t.table}.{c}: present on one side only — not metric-compared"
+                for c in uncompared
+            )
+            n = int(next(r.value_b for r in rows if r.metric == METRIC_ROW_CNT))
+            copied["rows"] = n
+            dev = sum(r.status == "DEVIATION" for r in rows)
+            self.logger.log(
+                f"validate {t.table}",
+                "ok" if dev == 0 else "DEVIATION",
+                qualified,
+                rows=dev,
+            )
+            return TableReport(t.table, n, dev, warnings), rows
 
         done = map_tables(
             self.spark,
             migrate_one,
             sorted(catalog.tables, key=lambda x: (x.schema, x.table)),
         )
-        report = MigrationReport(tables=[rep for rep, _s, _rows in done])
+        report = MigrationReport(tables=[rep for rep, _rows in done])
         if validate and done:
             report.validation = self.spark.createDataFrame(
-                [r for _rep, _s, rows in done for r in rows], done[0][1]
+                [r for _rep, rows in done for r in rows], COMPARISON_SCHEMA
             )
         return report

@@ -1065,4 +1065,5 @@ def _zorder_epoch(
         # a replayed epoch must clean and reuse the SAME stage dir
         pending_id=f"{run_id}-{int(epoch_id)}",
         extra_meta=fence,
+        meta=meta,
     )

@@ -1468,11 +1468,12 @@ def test_cli_dedup_and_ann_missing_index_is_a_clean_error(spark, tmp_path,
 
 
 def test_cli_ann_append_grows_index_with_stored_geometry(
-    spark, sf_smoke, tmp_path, capsys
+    spark, sf_smoke, tmp_path, capsys, monkeypatch
 ):
     """ann append: new vectors encode with the STORED coarse/codebooks
     (never re-trained silently); an appended exact-duplicate of a query
-    becomes its rank-1 hit; normalization contradictions exit 2."""
+    becomes its rank-1 hit; append and search each parse the index meta
+    once; normalization contradictions exit 2."""
     emb_dir = str(tmp_path / "emb")
     extra_dir = str(tmp_path / "extra")
     q_dir = str(tmp_path / "q")
@@ -1491,6 +1492,7 @@ def test_cli_ann_append_grows_index_with_stored_geometry(
                "--n-centroids", "8", "--m", "8", "--pq-k", "32"])
     assert rc == 0
     capsys.readouterr()
+    loads = _count_meta_loads(monkeypatch)
     rc = main(["ann", "append", "--index", index, "--corpus", extra_dir])
     cap = capsys.readouterr()
     assert rc == 0 and "appended 3 vectors" in cap.out
@@ -1499,6 +1501,8 @@ def test_cli_ann_append_grows_index_with_stored_geometry(
     rc = main(["ann", "search", "--index", index, "--queries", q_dir,
                "--k", "2", "--out", out_dir])
     assert rc == 0
+    assert loads == ["ann", "ann"]
+    monkeypatch.undo()
     capsys.readouterr()
     top1 = {
         r.query_id: r.neighbor_id
@@ -2308,10 +2312,25 @@ def test_cli_dedup_cluster_bad_knobs_exit_2(spark, sf_smoke, capsys):
 # round-10 operators (the lifecycle-complete convention)
 
 
-def test_cli_layout_append_then_report(spark, tmp_path, capsys):
+def _count_meta_loads(monkeypatch) -> list:
+    """Record the kind of every meta file store_meta parses."""
+    from database_migration_spark.functions import store_meta
+
+    loads, load = [], store_meta._load
+
+    def counted(path, kind):
+        loads.append(kind)
+        return load(path, kind)
+
+    monkeypatch.setattr(store_meta, "_load", counted)
+    return loads
+
+
+def test_cli_layout_append_then_report(spark, tmp_path, capsys, monkeypatch):
     """Write (compact --zorder), grow (layout append), inspect (layout
     report): per-file spans stay bounded across old+new files because the
-    append clusters on the STORED grid; contradictions exit 2."""
+    append clusters on the STORED grid and parses the layout meta once;
+    contradictions exit 2."""
     from database_migration_spark.operators.layout import (
         zorder_span_report,
     )
@@ -2334,9 +2353,12 @@ def test_cli_layout_append_then_report(spark, tmp_path, capsys):
         "id LONG, a LONG, b LONG",
     ).write.parquet(f"{batch}/delta.parquet")
 
+    loads = _count_meta_loads(monkeypatch)
     rc = main(["layout", "append", "--target", dest, "--batch", batch])
     cap = capsys.readouterr()
     assert rc == 0
+    assert loads == ["layout"]
+    monkeypatch.undo()
     assert "appended -> rows=12000" in cap.out
     assert "span fraction" in cap.out
     assert spark.read.parquet(dest).count() == 12_000

@@ -411,3 +411,32 @@ def test_bigram_typicality_reference_and_edge_docs(spark):
     # c1(x)=4; (x,y)=3 -> 750000; (x,q)=1 -> 250000
     assert o2[1].typicality_ppm == 750_000
     assert o2[4].typicality_ppm == 250_000
+
+
+def test_sync_rows_after_is_exact_from_validation(spark, sf_smoke, tmp_path):
+    """A validating sync takes rows_after from the target's ROW_CNT metric
+    instead of counting the target: it equals the published target's
+    parquet footers, on the bootstrap and on a delta merge, and matches
+    what a non-validating sync counts."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from database_migration_spark.operators.delta_sync import sync_table
+    from database_migration_spark.sources.parquet_source import ParquetSource
+
+    adapter = ParquetSource(spark, sf_smoke)
+    root = str(tmp_path / "tgt")
+
+    def footer_rows():
+        return sum(
+            pq.read_metadata(os.path.join(d, f)).num_rows
+            for d, _dirs, files in os.walk(root)
+            for f in files if f.endswith(".parquet")
+        )
+
+    for validate in (True, True, False):
+        rep = sync_table(spark, adapter, root, "orders",
+                         delta_col="o_orderdate", validate=validate)
+        assert rep.deviations == (0 if validate else None)
+        assert rep.rows_after == footer_rows() > 0

@@ -2,12 +2,14 @@
 corrupted copy is caught (the reference's CHECK_MIGRATION self-validation,
 mysql_to_exasol.sql:249-318)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from database_migration_spark.operators.validate import (
     compare_metrics,
     compute_metrics,
     mode_metric,
+    validate_pair,
 )
 
 
@@ -74,3 +76,102 @@ def test_suggest_foreign_key_classification(spark):
 
     miss = suggest_foreign_key(child, "ref", parent_missing, "id").collect()[0]
     assert not miss.is_candidate and miss.n_orphans == 2  # both ref=2 rows
+
+
+def _two_plan(left, right, table, distinct_mode):
+    rset = set(right.columns)
+    common = [c for c in left.columns if c in rset]
+    cmp = compare_metrics(
+        compute_metrics(left.select(common), table, distinct_mode=distinct_mode),
+        compute_metrics(right.select(common), table, distinct_mode=distinct_mode),
+    )
+    return {(r.column_name, r.metric, r.value_a, r.value_b, r.status)
+            for r in cmp.collect()}
+
+
+def _mixed_types(spark):
+    """One common column per type pair a union would widen: INT/BIGINT,
+    DECIMAL(10,2)/DOUBLE and TIMESTAMP/STRING (NULLs included)."""
+    import datetime as dt
+    from decimal import Decimal
+
+    left = spark.createDataFrame(
+        [(1, Decimal("1.25"), dt.datetime(2024, 1, 2, 3, 4, 5)),
+         (7, None, dt.datetime(2024, 5, 6, 7, 8, 9)),
+         (None, Decimal("-3.50"), None)],
+        "k INT, d DECIMAL(10,2), ts TIMESTAMP",
+    )
+    right = spark.createDataFrame(
+        [(1, 1.25, "2024-01-02 03:04:05"),
+         (7, None, "2024-05-06 07:08:09"),
+         (None, -3.5, None)],
+        "k BIGINT, d DOUBLE, ts STRING",
+    )
+    return left, right
+
+
+@pytest.mark.parametrize("case", [
+    "identical", "corrupted", "mixed_types", "empty_right", "empty_left",
+    "one_sided", "approx",
+])
+def test_validate_pair_matches_two_plan_compare(spark, sf_smoke, case):
+    """validate_pair's one-plan rows equal the lazy two-plan compare
+    (compute_metrics on each side, compare_metrics) as sets, and the
+    one-sided columns come back as ``uncompared`` in left-then-right
+    order."""
+    li = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
+    left, right, mode, uncompared = li, li.select(*li.columns), "exact", []
+    if case == "corrupted":
+        right = li.withColumn("l_quantity", F.col("l_quantity") * 2)
+    elif case == "mixed_types":
+        left, right = _mixed_types(spark)
+    elif case == "empty_right":
+        right = li.where(F.lit(False))
+    elif case == "empty_left":
+        left = li.where(F.lit(False))
+    elif case == "one_sided":
+        left = li.withColumn("only_left", F.lit(1)).drop("l_tax")
+        right = li.withColumn("only_right", F.lit("x"))
+        uncompared = ["only_left", "l_tax", "only_right"]
+    elif case == "approx":
+        mode = "approx"
+    rows, unc = validate_pair(left, right, "t", distinct_mode=mode)
+    assert unc == uncompared
+    assert all(r.table_name == "t" for r in rows)
+    got = {(r.column_name, r.metric, r.value_a, r.value_b, r.status)
+           for r in rows}
+    assert len(got) == len(rows)
+    assert got == _two_plan(left, right, "t", mode)
+    devs = {r.column_name for r in rows if r.status == "DEVIATION"}
+    if case == "corrupted":
+        assert "l_quantity" in devs
+    elif case in ("identical", "one_sided", "approx"):
+        assert not devs
+    elif case == "mixed_types":
+        # each side keeps its own type: DECIMAL sums, a STRING has lengths
+        by = {(r.column_name, r.metric): r for r in rows}
+        assert by[("d", "SUM_VAL")].value_b is None
+        assert by[("ts", "MAX_LEN")].value_a is None
+        assert by[("ts", "MAX_VAL")].status == "OK"
+        assert by[("k", "SUM_VAL")].status == "OK"
+
+
+def test_validate_pair_job_budget(spark, sf_smoke):
+    """One validate_pair is one Spark action: the sf_smoke lineitem pair
+    runs at most 6 jobs (the two-plan compare ran 11)."""
+    import uuid
+
+    sc = spark.sparkContext
+    path = f"{sf_smoke}/lineitem.parquet"
+    # the reads' schema-inference jobs run outside the group
+    left, right = spark.read.parquet(path), spark.read.parquet(path)
+    group = f"validate-pair-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "validate_pair job budget", False)
+    try:
+        validate_pair(left, right, "lineitem")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6
