@@ -1580,14 +1580,12 @@ def cmd_dedup(args) -> int:
       like overlap.
     """
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     from database_migration_spark.operators.dedup import (
         INDEX_DEFAULTS,
         append_fingerprint_index,
-        compact_partitioned,
         fingerprint_store,
         incremental_dedup_indexed,
         write_fingerprint_index,
@@ -1859,7 +1857,6 @@ def cmd_dedup(args) -> int:
     if args.action == "forget":
         from database_migration_spark.operators.dedup import (
             delete_rows_partitioned,
-            swap_partitions,
         )
 
         sub_ixs = _dedup_sub_indexes(args.index)
@@ -1885,15 +1882,12 @@ def cmd_dedup(args) -> int:
         total_deleted = 0
         for sub_ix in sub_ixs:
             src = f"{args.index}/{sub_ix}"
-            staging = src + ".forget"
             # the sub-indexes bucket on CONTENT/band-key hashes, not on
             # the id, so the locate pass is the column-pruned
             # (sid, bucket) scan — still never a full-row read
             res = delete_rows_partitioned(
-                spark, src, staging, ids, "sid", "bucket"
+                spark, src, src + ".forget", ids, "sid", "bucket"
             )
-            swap_partitions(src, staging, res["partitions"], "bucket")
-            shutil.rmtree(staging, ignore_errors=True)
             total_deleted += res["rows_deleted"]
             print(f"{sub_ix}: {res['rows_deleted']} rows dropped from "
                   f"{len(res['partitions'])} partition(s), "
@@ -1903,27 +1897,34 @@ def cmd_dedup(args) -> int:
                   file=sys.stderr)
         return 0
 
-    # compact: one file per bucket per sub-index, then rename-swap
+    # compact: one file per bucket per sub-index
     sub_ixs = _dedup_sub_indexes(args.index)
     if not os.path.isdir(os.path.join(args.index, sub_ixs[0])):
         print(f"error: no dedup index at {args.index} "
               "(run `dedup build` first)", file=sys.stderr)
         return 2
+    _compact_sub_indexes(spark, args.index, sub_ixs, "bucket")
+    return 0
+
+
+def _compact_sub_indexes(spark, index: str, sub_ixs, partition_col: str) -> None:
+    """`dedup compact` / `ann compact`: rewrite each sub-index to one file
+    per partition value and commit it over the old one in one swap."""
+    import os
+
+    from database_migration_spark.functions.io import build_store
+    from database_migration_spark.operators.dedup import compact_partitioned
+
     for sub_ix in sub_ixs:
-        src = f"{args.index}/{sub_ix}"
-        staging = src + ".compact"
-        compact_partitioned(spark, src, staging)
-        old = src + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(src, old)
-        os.rename(staging, src)
-        shutil.rmtree(old, ignore_errors=True)
+        src = f"{index}/{sub_ix}"
+        build_store(
+            src, lambda dest: compact_partitioned(spark, src, dest, partition_col)
+        )
         n_files = sum(
             len([f for f in files if f.endswith(".parquet")])
             for _, _, files in os.walk(src)
         )
         print(f"{sub_ix}: compacted to {n_files} files")
-    return 0
 
 
 def _dedup_sub_indexes(index_path: str) -> tuple:
@@ -2329,7 +2330,6 @@ def cmd_ann(args) -> int:
     """
     import json
     import math
-    import os
 
     from pyspark.sql import functions as F
 
@@ -2458,32 +2458,12 @@ def cmd_ann(args) -> int:
         return 0
 
     if args.action == "compact":
-        # append epochs add one file per touched cell directory; compact
-        # to one file per cell and rename-swap (the dedup compact dance)
-        import shutil
-
-        from database_migration_spark.operators.dedup import (
-            compact_partitioned,
-        )
-
+        # append epochs add one file per touched cell directory
         if store_meta.read(args.index, "ann") is None:
             print(f"error: no ANN index at {args.index} "
                   "(run `ann build` first)", file=sys.stderr)
             return 2
-        for sub_ix in ("codes", "vectors"):
-            src = f"{args.index}/{sub_ix}"
-            staging = src + ".compact"
-            compact_partitioned(spark, src, staging, partition_col="cell")
-            old = src + ".old"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(src, old)
-            os.rename(staging, src)
-            shutil.rmtree(old, ignore_errors=True)
-            n_files = sum(
-                len([f for f in files if f.endswith(".parquet")])
-                for _, _, files in os.walk(src)
-            )
-            print(f"{sub_ix}: compacted to {n_files} files")
+        _compact_sub_indexes(spark, args.index, ("codes", "vectors"), "cell")
         return 0
 
     if args.action == "drift":

@@ -1,28 +1,32 @@
-"""Shared parquet publish step for self-referential rewrites.
+"""The one data commit of every store: a rename-aside directory swap.
 
-A DataFrame whose lineage READS ``path`` cannot be written back to
-``path`` directly: the first commit deletes input files the remaining
-tasks still need (Spark's self-overwrite race). Every incremental
-operator that maintains a plain-parquet store therefore stages to a
-sibling path and swaps it into the target — one protocol, one
-implementation (round-6 review: five hand-rolled copies had accumulated;
-a fix to the dance must propagate to all of them).
+A DataFrame whose lineage reads ``path`` cannot be written back to it
+(Spark's self-overwrite race), and an overwrite deletes the previous
+generation before the new one is complete. So every writer stages a whole
+new generation in a sibling directory and :func:`_swap` commits it: move
+the live generation to an ASIDE name, rename the staged one into place,
+drop the aside copy. Every store commit calls it:
 
-The swap itself is a DIRECTORY RENAME, not a re-read + overwrite: an
-overwrite of ``path`` deletes the previous generation file-by-file before
-the new one is fully written, so a crash mid-overwrite shreds the
-accumulated state — fatal for read-modify-write targets like
-``stream_cdc_apply``'s (_seq fences and delete tombstones live in the
-target; the epoch replay then runs against a broken base). With the
-rename swap the previous generation stays intact until the new one is
-complete; the only crash window is between the two renames, which leaves
-BOTH generations on disk (``path`` briefly absent, ``path + ".old"``
-recoverable) instead of neither. Local-path staging is the norm here
-(staging is always a sibling of ``path``); a non-local path falls back to
-the legacy re-read + overwrite, documented as weaker.
+- the whole-store commits, aside at ``path + ".old"``:
+  :func:`publish_parquet` stages a DataFrame; :func:`build_store` lets
+  the caller write data AND meta into ``path + ".build"`` (index builds,
+  compaction), so both land in one rename.
+- :func:`swap_partition_dirs` swaps one ``<col>=<value>`` directory at a
+  time (``publish_partitions``), aside at ``path/.<col>=<value>.old``: a
+  ``.`` name is hidden from Spark's listing of ``path``, whereas an
+  ``_pt=1.old`` directory would be read as a partition value.
 
-At scale a transactional table format (Delta/Iceberg MERGE INTO) replaces
-this entirely.
+Crash contract: no generation is deleted before its replacement is in
+place. A crash between the two renames leaves BOTH generations on disk
+(aside and staged) with ``path``, or that partition, briefly absent; a
+crash inside a multi-partition swap leaves a prefix of the partitions
+swapped, each consistent. Not covered yet: there is no generation
+counter and no recover-on-open, so a replay after such a crash sees the
+store or partition missing, and its own swap drops the leftover aside
+copy. layout's staged file-level append is a separate protocol. A
+non-local path has no POSIX rename: ``publish_parquet`` falls back to a
+documented, weaker re-read + overwrite; the other commits raise. A
+transactional table format (Delta/Iceberg) replaces all of this at scale.
 """
 
 from __future__ import annotations
@@ -35,6 +39,28 @@ from pyspark.sql import DataFrame
 from database_migration_spark.functions import store_meta
 
 
+def _swap(staged: str, live: str, aside: str) -> None:
+    """Rename-aside commit of ``staged`` as ``live`` (module docstring). A
+    missing ``staged`` commits a deletion of ``live``."""
+    shutil.rmtree(aside, ignore_errors=True)
+    if os.path.exists(live):
+        os.rename(live, aside)
+    if os.path.exists(staged):
+        os.rename(staged, live)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def build_store(path: str, write) -> None:
+    """Rebuild the whole store at ``path``: ``write(staging)`` writes every
+    file of the new generation (data and meta) into the cleared sibling
+    ``path + ".build"``, which is then committed in one swap."""
+    _require_local(path)  # a remote build would stage and commit nothing
+    staging = path + ".build"
+    shutil.rmtree(staging, ignore_errors=True)
+    write(staging)
+    _swap(staging, path, path + ".old")
+
+
 def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
     """Stage ``df`` to ``staging``, swap into ``path`` (directory rename —
     the previous generation survives until the new one is committed), drop
@@ -42,12 +68,7 @@ def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
     spark = df.sparkSession
     df.write.mode("overwrite").parquet(staging)
     if os.path.isdir(staging):
-        old = path + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old, ignore_errors=True)
+        _swap(staging, path, path + ".old")
     else:
         # non-local filesystem (scheme-qualified path): no POSIX rename —
         # re-read the staged copy (breaking the lineage) and overwrite.
@@ -62,8 +83,8 @@ def publish_parquet(df: DataFrame, path: str, staging: str) -> None:
 # maintained itself through publish_parquet (streaming CDC, SCD2) paid a
 # FULL target rewrite per epoch — measured flat 6-7 s at 1.5 M keys, but
 # proportional to |target|, which at 100 TB is the wrong shape. The cure
-# the repo already proved on the dedup side (delete_rows_partitioned /
-# swap_partitions): lay the target out partitionBy(key-hash bucket), derive
+# the repo already proved on the dedup side (delete_rows_partitioned):
+# lay the target out partitionBy(key-hash bucket), derive
 # the TOUCHED buckets from the delta alone, rewrite + swap only those.
 # Untouched partition directories keep their file identity; per-epoch cost
 # tracks |delta| + |touched partitions|, not |target|.
@@ -107,7 +128,7 @@ def write_target_meta(path: str, keys: list, n_partitions: int) -> None:
 
 def _require_local(*paths: str) -> None:
     """RAISE on a scheme-qualified (non-local) path anywhere in the
-    surgical publish protocol. The swap is os.rename/shutil.move — on an
+    surgical publish protocol or an index build. The swap is os.rename — on an
     object-store target the epoch slice would stage remotely while the
     swap moves nothing locally, and the epoch would "commit" having
     changed no data: SILENT LOSS, strictly worse than a crash (judge
@@ -120,7 +141,7 @@ def _require_local(*paths: str) -> None:
     for p in paths:
         if p and re.match(r"^[A-Za-z][A-Za-z0-9+.-]*://", p):
             raise ValueError(
-                f"surgical partition publish requires a local filesystem "
+                f"the store commit requires a local filesystem "
                 f"path, got {p!r}: the directory-rename commit cannot run "
                 "on an object store (it would silently commit nothing). "
                 "Use a transactional table format's replace-partitions "
@@ -132,8 +153,8 @@ def _require_local(*paths: str) -> None:
 def swap_partition_dirs(
     path: str, staging: str, partitions: list, partition_col: str = PT_COL
 ) -> None:
-    """Commit a staged partition rewrite: replace each affected
-    ``<partition_col>=<value>`` directory of ``path`` with the staging one
+    """Commit a staged partition rewrite: swap each listed
+    ``<partition_col>=<value>`` directory of ``staging`` into ``path``
     (local-FS rename; the object-store analogue is the table format's
     replace-partitions commit). Partitions not listed are untouched —
     their files keep their identity, which is the whole point. A missing
@@ -145,12 +166,11 @@ def swap_partition_dirs(
     os.makedirs(path, exist_ok=True)  # bootstrap: target root may not exist
     for p in partitions:
         sub = f"{partition_col}={p}"
-        dst = os.path.join(path, sub)
-        src = os.path.join(staging, sub)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)
-        if os.path.exists(src):
-            shutil.move(src, dst)
+        _swap(
+            os.path.join(staging, sub),
+            os.path.join(path, sub),
+            os.path.join(path, f".{sub}.old"),
+        )
 
 
 def publish_partitions(
@@ -164,7 +184,7 @@ def publish_partitions(
     partitions, carrying ``partition_col``) and swap those directories
     into ``path``. The repartition-by-partition-column write keeps one
     task per affected partition (no 32-tasks-each-touch-every-partition
-    small-file explosion — the delete_rows_partitioned convention)."""
+    small-file explosion)."""
     _require_local(path, staging)  # BEFORE the staging write, not after
     n = max(1, len(affected))
     (

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from database_migration_spark.functions import store_meta
+from database_migration_spark.functions.io import build_store, publish_partitions
 from database_migration_spark.functions.hashing import (
     md5_long,
     md5_long_spark_sql,
@@ -1274,10 +1275,15 @@ def write_fingerprint_index(
     the store's scale. ``extra`` records additional layout-defining
     parameters in the metadata (the CLI stores the shingle ``k`` and
     minhash ``seed`` there — fingerprints appended later must be computed
-    with the same ones or band keys never collide).
+    with the same ones or band keys never collide). Data and meta are
+    staged together and committed in one swap (``io.build_store``), so a
+    failed rebuild leaves the previous index whole.
     """
-    _write_fingerprint_index(store_fp, path, num_perm, bands, buckets, "overwrite")
-    _write_index_meta(path, num_perm, bands, buckets, extra)
+    def write(stage):
+        _write_fingerprint_index(store_fp, stage, num_perm, bands, buckets)
+        _write_index_meta(stage, num_perm, bands, buckets, extra)
+
+    build_store(path, write)
 
 
 def _write_index_meta(
@@ -1309,22 +1315,21 @@ def append_fingerprint_index(
         {"num_perm": num_perm, "bands": bands, "buckets": buckets},
         INDEX_DEFAULTS,
     )
-    _write_fingerprint_index(
-        new_fp, path, p["num_perm"], p["bands"], p["buckets"], "append"
-    )
+    _write_fingerprint_index(new_fp, path, p["num_perm"], p["bands"], p["buckets"])
 
 
 def _write_fingerprint_index(
-    store_fp: DataFrame, path: str, num_perm: int, bands: int, buckets: int,
-    mode: str,
+    store_fp: DataFrame, path: str, num_perm: int, bands: int, buckets: int
 ) -> None:
+    """Append ``store_fp`` to the index relations at ``path`` (a build
+    appends into an empty staging directory)."""
     sig_cols = [f"sig_{i}" for i in range(num_perm)]
     content = store_fp.select(
         F.col("id").alias("sid"),
         "content_h",
         F.pmod("content_h", F.lit(buckets)).alias("bucket"),
     )
-    content.write.mode(mode).partitionBy("bucket").parquet(f"{path}/content")
+    content.write.mode("append").partitionBy("bucket").parquet(f"{path}/content")
     idx = (
         banded_keys(store_fp, num_perm, bands)
         .join(store_fp.select("id", *sig_cols), "id")
@@ -1336,7 +1341,7 @@ def _write_fingerprint_index(
             F.pmod(F.hash("band", "key"), F.lit(buckets)).alias("bucket"),
         )
     )
-    idx.write.mode(mode).partitionBy("bucket").parquet(f"{path}/bands")
+    idx.write.mode("append").partitionBy("bucket").parquet(f"{path}/bands")
 
 
 def incremental_dedup_indexed(
@@ -1450,17 +1455,21 @@ def write_hamming_index(
     contradictions RAISE (the index-meta rule — a mismatched
     ``max_hamming`` reads different chunk offsets and silently misses
     every duplicate). ``extra`` records signature provenance (the CLI
-    stores the payload hash kind there)."""
-    _write_hamming_index(sigs, path, bits, max_hamming, buckets, "overwrite")
+    stores the payload hash kind there). Data and meta are staged
+    together and committed in one swap (``io.build_store``)."""
     meta = {"kind": "hamming", "bits": bits, "max_hamming": max_hamming,
             "buckets": buckets}
     meta.update(extra or {})
-    store_meta.write(path, "hamming", meta)
+
+    def write(stage):
+        _write_hamming_index(sigs, stage, bits, max_hamming, buckets)
+        store_meta.write(stage, "hamming", meta)
+
+    build_store(path, write)
 
 
 def _write_hamming_index(
-    sigs: DataFrame, path: str, bits: int, max_hamming: int, buckets: int,
-    mode: str,
+    sigs: DataFrame, path: str, bits: int, max_hamming: int, buckets: int
 ) -> None:
     chunks = _hamming_chunks(sigs, bits, max_hamming).select(
         F.col("id").alias("sid"),
@@ -1470,7 +1479,7 @@ def _write_hamming_index(
         "ck",
         F.pmod(F.hash("ci", "ck"), F.lit(buckets)).alias("bucket"),
     )
-    chunks.write.mode(mode).partitionBy("bucket").parquet(f"{path}/chunks")
+    chunks.write.mode("append").partitionBy("bucket").parquet(f"{path}/chunks")
 
 
 def append_hamming_index(
@@ -1490,9 +1499,7 @@ def append_hamming_index(
         {"bits": bits, "max_hamming": max_hamming, "buckets": buckets},
         HAMMING_DEFAULTS,
     )
-    _write_hamming_index(
-        sigs, path, p["bits"], p["max_hamming"], p["buckets"], "append"
-    )
+    _write_hamming_index(sigs, path, p["bits"], p["max_hamming"], p["buckets"])
 
 
 def hamming_dedup_indexed(
@@ -1598,12 +1605,13 @@ def compact_partitioned(
 
     Writes to a NEW path by design — Spark cannot safely overwrite a
     dataset it is concurrently reading (the first commit deletes input
-    files the remaining tasks still need); the caller swaps directories
-    after the job commits, the same move-into-place protocol every
-    compaction job uses. One shuffle, keyed on the partition column —
-    skew across buckets is bounded by the hash partitioning that built
-    them; use ``maxRecordsPerFile`` on the writer if a single bucket file
-    would exceed the target size.
+    files the remaining tasks still need). To replace ``src`` with the
+    result, call it through ``functions.io.build_store(src, ...)``, which
+    stages ``dest`` and commits it in one rename-aside swap (the CLI
+    compactions do). One shuffle, keyed on the partition column — skew
+    across buckets is bounded by the hash partitioning that built them;
+    use ``maxRecordsPerFile`` on the writer if a single bucket file would
+    exceed the target size.
     """
     df = spark.read.parquet(src)
     n = max(1, df.select(partition_col).distinct().count())
@@ -1641,14 +1649,14 @@ def delete_rows_partitioned(
     The surviving rows of ONLY the affected partitions are rewritten to
     ``staging`` (broadcast anti-join; the read plan prunes to the affected
     partition directories at file listing — PartitionFilters, asserted in
-    tests). Untouched partitions are never read or written. The caller
-    then swaps the affected partition directories into place
-    (:func:`swap_partitions` — local-FS move here; at scale the same
-    protocol is the object-store/table-format atomic partition commit,
-    e.g. rename-into-place or an Iceberg/Delta replace-partitions commit).
+    tests) and committed into ``path`` partition by partition through
+    ``functions.io.publish_partitions`` (the rename-aside swap; a
+    partition that kept no rows is removed). Untouched partitions are
+    never read or written. At scale the same step is the table format's
+    replace-partitions commit (Iceberg/Delta).
 
-    Returns {"partitions": [...], "rows_deleted": n, "rows_kept": n}
-    so the caller can audit the pass before swapping.
+    Returns the audit dict {"partitions": [...], "rows_deleted": n,
+    "rows_kept": n}; ``rows_kept`` counts the committed partitions.
     """
     ids = spark.createDataFrame(
         [(i,) for i in forget_ids], schema=f"{id_col} long"
@@ -1669,45 +1677,25 @@ def delete_rows_partitioned(
             .distinct()
             .collect()
         )
-    pruned = spark.read.parquet(path).where(F.col(partition_col).isin(affected))
-    kept = pruned.join(F.broadcast(ids), id_col, "left_anti")
-    n = max(1, len(affected))
-    (
-        kept.repartition(n, partition_col)
-        .write.mode("overwrite")
-        .partitionBy(partition_col)
-        .parquet(staging)
+    if not affected:
+        return {"partitions": [], "rows_deleted": 0, "rows_kept": 0}
+    in_affected = F.col(partition_col).isin(affected)
+    pruned = spark.read.parquet(path).where(in_affected)
+    rows_before = pruned.count()
+    publish_partitions(
+        pruned.join(F.broadcast(ids), id_col, "left_anti"),
+        path, staging, affected, partition_col,
     )
-    # count survivors from the committed staging files (no recompute of the
-    # anti-join); deleted = affected-partition rows minus survivors. The
-    # explicit schema makes the read work on ANY filesystem even when the
-    # batch purged every row of its partitions (the commit then holds only
-    # _SUCCESS — schema inference would fail with UNABLE_TO_INFER_SCHEMA,
-    # and a local-FS existence probe would silently miscount on hdfs/s3a);
-    # swap_partitions handles the missing staging subdirectory as a
-    # full-partition delete.
+    # the explicit schema keeps the count exact when the batch purged every
+    # row of its partitions (nothing left to infer a schema from)
     rows_kept = (
-        spark.read.schema(pruned.schema).parquet(staging).count() if affected else 0
+        spark.read.schema(pruned.schema).parquet(path).where(in_affected).count()
     )
     return {
         "partitions": affected,
-        "rows_deleted": pruned.count() - rows_kept,
+        "rows_deleted": rows_before - rows_kept,
         "rows_kept": rows_kept,
     }
-
-
-def swap_partitions(path: str, staging: str, partitions: list, partition_col: str = "bucket") -> None:
-    """Commit a :func:`delete_rows_partitioned` staging area: replace each
-    affected ``<partition_col>=<value>`` directory of ``path`` with the
-    staging one (local-FS rename; the object-store analogue is the
-    partition-replace commit of the table format in use). Partitions not
-    listed are untouched — their files keep their identity, which is the
-    whole point of the targeted pass. (Delegates to the shared
-    ``functions.io.swap_partition_dirs`` — one swap protocol repo-wide,
-    the publish_parquet single-implementation rule.)"""
-    from database_migration_spark.functions.io import swap_partition_dirs
-
-    swap_partition_dirs(path, staging, partitions, partition_col)
 
 
 def line_occurrences(

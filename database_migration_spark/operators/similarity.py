@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from database_migration_spark.functions import store_meta
+from database_migration_spark.functions.io import build_store
 from database_migration_spark.functions.parallel import fan_out
 
 
@@ -1673,22 +1674,13 @@ def write_ivf_pq_index(
     the index in ``<path>/_ann_meta.json`` — the fingerprint-index
     metadata rule: a prober must never guess the writer's layout
     (cells × dim + m×k×d floats ≈ a few MB at hundreds of cells; store
-    the geometry as parquet instead if you train 10⁵+ cells)."""
+    the geometry as parquet instead if you train 10⁵+ cells). Data and
+    meta are staged together and committed in one swap
+    (``io.build_store``)."""
     import numpy as np
 
     cent = np.asarray(coarse, dtype=np.float64)
     books = np.asarray(codebooks, dtype=np.float64)
-    codes = ivf_pq_encode(corpus, cent, books, id_col, vec_col)
-    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
-    assigned = _assign_cells(
-        fan_out(corpus).select(F.col(id_col).alias("_id"), vec_col),
-        cent, vec_col, "vec", n_probe=1,
-    ).select(
-        F.col("vec").alias(id_col), F.col("vec_v").alias(vec_col), "cell"
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{path}/vectors"
-    )
     meta = {
         "n_centroids": int(cent.shape[0]),
         "dim": int(cent.shape[1]),
@@ -1698,7 +1690,12 @@ def write_ivf_pq_index(
         "codebooks": books.tolist(),
     }
     meta.update(extra or {})
-    store_meta.write(path, "ann", meta)
+
+    def write(stage):
+        _append_ivf_pq_data(corpus, stage, cent, books, id_col, vec_col)
+        store_meta.write(stage, "ann", meta)
+
+    build_store(path, write)
 
 
 def _stored_geometry(path: str, meta: "dict | None" = None):
@@ -1780,6 +1777,13 @@ def append_ivf_pq_index(
     Dynamic partition append: each new row lands as a file inside its
     existing cell directory; compact per standard parquet hygiene."""
     cent, books = _stored_geometry(path, meta)
+    _append_ivf_pq_data(corpus, path, cent, books, id_col, vec_col)
+
+
+def _append_ivf_pq_data(corpus, path, cent, books, id_col, vec_col) -> None:
+    """Append ``corpus``'s codes and cell-assigned vectors to the index
+    relations at ``path`` (a build appends into an empty staging
+    directory)."""
     ivf_pq_encode(corpus, cent, books, id_col, vec_col).write.mode(
         "append"
     ).partitionBy("cell").parquet(f"{path}/codes")

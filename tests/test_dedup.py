@@ -383,10 +383,7 @@ def test_delete_rows_partitioned_surgical(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from database_migration_spark.operators.dedup import (
-        delete_rows_partitioned,
-        swap_partitions,
-    )
+    from database_migration_spark.operators.dedup import delete_rows_partitioned
 
     path = str(tmp_path / "corpus")
     docs = spark.createDataFrame(
@@ -412,7 +409,6 @@ def test_delete_rows_partitioned_surgical(spark, tmp_path):
     )
     assert res == {"partitions": [3, 4], "rows_deleted": 3, "rows_kept": 13}
 
-    swap_partitions(path, staging, res["partitions"])
     after = spark.read.parquet(path)
     assert after.count() == 61
     assert after.where(F.col("doc_id").isin([3, 11, 20])).count() == 0
@@ -451,15 +447,12 @@ def test_delete_rows_partitioned_surgical(spark, tmp_path):
 def test_delete_rows_partitioned_full_partition_purge(spark, tmp_path):
     """A forget batch that deletes EVERY row of its partitions commits an
     empty staging area (no part files) — the pass must still return its
-    audit dict and the swap must remove the purged partition directory."""
+    audit dict and its commit must remove the purged partition directory."""
     import os
 
     from pyspark.sql import functions as F
 
-    from database_migration_spark.operators.dedup import (
-        delete_rows_partitioned,
-        swap_partitions,
-    )
+    from database_migration_spark.operators.dedup import delete_rows_partitioned
 
     path = str(tmp_path / "corpus")
     spark.createDataFrame(
@@ -474,7 +467,6 @@ def test_delete_rows_partitioned_full_partition_purge(spark, tmp_path):
         partition_of=lambda c: F.pmod(c, F.lit(4)),
     )
     assert res == {"partitions": [1], "rows_deleted": 2, "rows_kept": 0}
-    swap_partitions(path, str(tmp_path / "staging"), res["partitions"])
     assert not os.path.exists(f"{path}/bucket=1")
     after = spark.read.parquet(path)
     assert after.count() == 6
