@@ -26,6 +26,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
 
+# spark.sql.files.maxPartitionBytes' default: the input volume Spark
+# itself hands one scan task — the unit fan floors are expressed in
+SPLIT_BYTES = 128 * 1024 * 1024
+
+
 def fan_out(
     df: DataFrame,
     n: int | None = None,
@@ -35,14 +40,24 @@ def fan_out(
     """Repartition up to the cluster's default parallelism — only when the
     input is small enough that its scan cannot feed every core.
 
-    Two-tier guard: a KNOWN-big size estimate (Catalyst's cached
-    sizeInBytes, ≥ cores × maxPartitionBytes) short-circuits with zero
-    plan→RDD conversion — the 100 TB path, where re-shuffling would move
-    the whole table. Small or UNKNOWN sizes (JDBC relations report the
-    Long.MaxValue default, which means "no stats", not "huge") fall back
-    to the exact partition-count check; that pays one plan→RDD conversion,
-    accepted because deciding wrongly there either strands a 1-partition
-    JDBC read on one core or adds a pointless shuffle.
+    The decision is the exact partition-count check: one plan→RDD
+    conversion, which both catches a 1-partition input (a single-row-group
+    file, an unpartitioned JDBC read) and prevents a redundant shuffle on
+    an already-wide one.
+
+    ``min_bytes`` opts a caller out of fanning SMALL inputs: when
+    Catalyst's size estimate (``sizeInBytes`` of the optimized plan) is
+    under the floor, the input passes through untouched — no shuffle, and
+    no partition probe either. The estimate is an UPPER bound (a join's is
+    the product of its children's; a source without statistics, such as a
+    JDBC relation, reports Long.MaxValue), so it can show that an input is
+    small but never that it is big: above the floor, the partition probe
+    decides as it does without one. For cheap scan+agg shapes (a global
+    count_distinct, the metric plans' Expand) the fan's extra exchange
+    costs more than single-task partial aggregation saves until one task's
+    share becomes the straggler — measured r12: lineitem PK distinct
+    0.63 s unfanned vs 0.80 s fanned at sf0.1. Floors derive from
+    :data:`SPLIT_BYTES`.
 
     ``key`` (a high-cardinality column / column list) switches the
     shuffle from round-robin to HASH partitioning. Round-robin pays a
@@ -56,20 +71,6 @@ def fan_out(
     l_orderkey). Keep round-robin (key=None) for tiny relations feeding
     per-row-expensive stages (image decode), where its perfectly even
     spread beats hash's multinomial balance.
-
-    ``min_bytes`` opts a caller out of fanning SMALL inputs: when the
-    size estimate is known and under the floor, the input passes through
-    untouched (no shuffle, and no partition probe either). For cheap
-    scan+agg shapes (a global count_distinct) the fan's extra exchange
-    costs more than single-task partial aggregation saves until the
-    input is large enough that one task becomes the straggler — measured
-    r12: lineitem PK distinct 0.63 s unfanned vs 0.80 s fanned at sf0.1.
-    (r13 revision of the r12 "×100 single-file input still wants the
-    fan" claim: the ×100 corpus lands as ~100 scan partitions, the
-    known-big short-circuit correctly declines, and interleaved cold
-    pairs measure gated == force-unfanned — the fan only matters for the
-    single-row-group fixture shape, which the partition-count probe
-    still catches. SCALE.md `pk_fan_x100`.)
     """
     target = n or df.sparkSession.sparkContext.defaultParallelism
     if not _should_fan(df, target, min_bytes):
@@ -82,27 +83,16 @@ def fan_out(
 
 def _should_fan(df: DataFrame, target: int, min_bytes: int = 0) -> bool:
     """The fan decision — see :func:`fan_out`'s docstring."""
-    max_pb = 128 * 1024 * 1024  # spark.sql.files.maxPartitionBytes default
-    # sources without statistics (JDBC relations) report
-    # spark.sql.defaultSizeInBytes = Long.MaxValue — that is "unknown",
-    # NOT "huge"; treating it as huge would leave a 1-partition JDBC read
-    # unfanned, the exact pathology this helper exists to prevent
-    unknown = 1 << 60
-    est = None
-    try:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-    except Exception:  # noqa: BLE001 — estimation is best-effort
-        pass
-    if est is not None and unknown > est >= target * max_pb:
-        return False  # genuinely big: already scans wide, don't move the table
-    if min_bytes and est is not None and est < min_bytes:
-        return False  # known-small under the caller's floor: not worth a fan
-    # small or unknown: the exact partition-count check (one plan→RDD
-    # conversion) decides — it both catches the unfanned 1-partition JDBC
-    # read and prevents a redundant shuffle on an already-wide input
+    if min_bytes and size_estimate(df) < min_bytes:
+        return False  # known-small under the caller's floor
     return df.rdd.getNumPartitions() < target
+
+
+def size_estimate(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` for ``df``'s optimized plan — an upper
+    bound on its volume, not a measurement (see :func:`fan_out`)."""
+    # py4j hands a Scala BigInt back as a Python int; str() reads either
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
 def map_tables(spark: SparkSession, fn, items) -> list:

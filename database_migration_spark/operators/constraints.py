@@ -161,7 +161,7 @@ def pk_check(
     NULL-key rows — the reference's post-load PK enforcement
     (set_primary_keys.sql) expressed as a single-scan aggregate (the
     conditional count_distinct skips NULL-key rows by construction)."""
-    from database_migration_spark.functions.parallel import fan_out
+    from database_migration_spark.functions.parallel import SPLIT_BYTES, fan_out
 
     # expressions render as SQL text (the r12 convention: ~130 py4j
     # round-trips per check otherwise, × 17 checks per report)
@@ -172,11 +172,12 @@ def pk_check(
     # nothing and the fan's parallel first phase only pays once one task's
     # partial-distinct becomes the straggler (r12: 0.63 s unfanned vs
     # 0.80 s fanned on sf0.1 lineitem; r13: at ×100 the input scans as
-    # ~100 partitions and the gate correctly no-ops — SCALE.md pk_fan_x100)
+    # ~100 partitions and the partition probe declines to fan — SCALE.md
+    # pk_fan_x100)
     agg = fan_out(
         df.selectExpr([f"`{k}`" for k in keys]),
         key=list(keys),
-        min_bytes=128 * 1024 * 1024,
+        min_bytes=SPLIT_BYTES,
     ).agg(
         F.expr("bigint(count(1)) AS n_rows"),
         F.expr(
@@ -298,7 +299,7 @@ def constraint_report(
     building 17 checks through per-check DataFrame calls cost ~130
     plan-construction round-trips of pure driver time per report —
     measured r12, ~0.9 s of the query's 3.1 s. One text, one parse."""
-    from database_migration_spark.functions.parallel import fan_out
+    from database_migration_spark.functions.parallel import SPLIT_BYTES, fan_out
 
     branches: list[str] = []
     params: dict[str, DataFrame] = {}
@@ -328,7 +329,7 @@ def constraint_report(
         params[key] = fan_out(
             tables[tbl].selectExpr([f"`{k}`" for k in cols]),
             key=list(cols),
-            min_bytes=128 * 1024 * 1024,
+            min_bytes=SPLIT_BYTES,
         )
         branches.append(
             "SELECT table_name, constraint_name, kind, n_rows, n_distinct,"

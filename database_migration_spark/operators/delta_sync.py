@@ -229,7 +229,10 @@ def sync_table(
     """
     import os
 
-    from database_migration_spark.sources.parquet_source import ParquetSource
+    from database_migration_spark.sources.parquet_source import (
+        ParquetSource,
+        read_parquet_portable,
+    )
 
     cat = adapter.scan_catalog("%", table, include_keys=True)
     meta = next(
@@ -282,7 +285,7 @@ def sync_table(
 
     publish_parquet(merged, path, path.rstrip("/") + ".sync-tmp")
 
-    fresh = spark.read.parquet(path)
+    fresh = read_parquet_portable(spark, path)  # footer schema, no inference job
     if not validate:
         return SyncReport(meta.table, plan, fresh.count(), None)
     from database_migration_spark.operators.validate import (

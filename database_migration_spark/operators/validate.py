@@ -156,8 +156,9 @@ def compute_metrics_wide(
 
     Two scans max: one for every plain metric (single aggregate, map-side
     combined), one narrow Expand pass for the exact distinct counts; the
-    1-row results cross-join back together. Input fanned out first —
-    single-row-group files otherwise serialize the whole table onto a core.
+    1-row results cross-join back together. An input whose Expand work
+    reaches one split is fanned out first (:func:`expand_fan_floor`) —
+    single-row-group files otherwise serialize it onto a core.
     """
     from database_migration_spark.functions.parallel import fan_out
 
@@ -165,19 +166,35 @@ def compute_metrics_wide(
     if not distinct:
         # single aggregate, single scan — map-side combine, no repartition
         return df.agg(*plain)
-    # exact mode: BOTH aggregates consume the same fanned-out exchange
-    # (one shuffle, two consumers — Spark reuses the exchange), so the
-    # distinct side's Expand runs parallel and the input moves once.
-    # fan_key (the table's PK when the caller knows it) switches the fan
-    # to hash partitioning — skips round-robin's serial full-row sort
+    # exact mode: once the Expand's work reaches one split (see
+    # expand_fan_floor), BOTH aggregates consume the same fanned-out
+    # exchange (one shuffle, two consumers — Spark reuses the exchange),
+    # so the distinct side's Expand runs parallel and the input moves
+    # once. fan_key (the table's PK when the caller knows it) switches the
+    # fan to hash partitioning — skips round-robin's serial full-row sort
     # (r12 opt round: mig_check_lineitem exec 2.10 → see OPTIMIZATION_r12).
-    fanned = fan_out(df, key=fan_key)
+    fanned = fan_out(df, key=fan_key, min_bytes=expand_fan_floor(len(distinct)))
     dcols = [c for c in (columns or df.columns)]
     # a select() that keeps every column anyway would still make the two
     # exchange subplans textually differ and defeat ReusedExchange — only
     # project when the distinct side genuinely reads fewer columns
     dside = fanned if dcols == df.columns else fanned.select(dcols)
     return fanned.agg(*plain).crossJoin(dside.agg(*distinct))
+
+
+def expand_fan_floor(n_distinct: int) -> int:
+    """``fan_out``'s ``min_bytes`` for an aggregate with ``n_distinct``
+    exact COUNT(DISTINCT)s: fan only when the Expand's volume — the
+    input's size estimate × ``n_distinct`` — reaches one split, the work
+    Spark itself gives one task. Below that, the round-robin fan's sort
+    and shuffle of every row cost more than the single-task aggregate
+    (``scale_probe.py --validate-fan``, lineitem pair on 4 cores: 1.93 s
+    gated vs 2.42 s fanned at sf0.01, where the partition-count rule
+    alone would fan). Above it the partition probe decides, as it does
+    for every ``fan_out`` caller."""
+    from database_migration_spark.functions.parallel import SPLIT_BYTES
+
+    return -(-SPLIT_BYTES // n_distinct)
 
 
 def compute_metrics(
@@ -355,7 +372,8 @@ def validate_pair(
     present on only one side. The rows equal
     ``compare_metrics(compute_metrics(l), compute_metrics(r))``, computed
     by ONE Spark action: both sides are unioned under a ``__side`` tag
-    (0 = left, 1 = right), fanned once in exact mode, aggregated grouped
+    (0 = left, 1 = right), fanned once in exact mode when the Expand's
+    work reaches one split (:func:`expand_fan_floor`), aggregated grouped
     by side (the plain metrics joined on ``__side`` to the distinct ones,
     so Expand carries only the counted columns), and the two collected
     rows compare on the driver with null-safe equality. Union columns are
@@ -373,6 +391,34 @@ def validate_pair(
     ``sync_table`` and the ``validate`` CLI so they stay behaviorally
     identical.
     """
+    wide, owner, uncompared = _pair_plan(left, right, distinct_mode)
+    got = {r["__side"]: r for r in wide.collect()}
+
+    # (column, metric) -> [value_a, value_b]; a metric only one side's type
+    # has keeps NULL on the other, as the full outer join does
+    pairs: dict[tuple[str, str], list] = {}
+    for field in wide.columns[1:]:
+        metric, _, ucol = field.partition("__")
+        column, only = owner.get(ucol, ("", None))  # ROW_CNT: no column
+        for side in ((0, 1) if only is None else (only,)):
+            row = got.get(side)
+            value = (row[field] if row is not None
+                     else "0" if metric in _COUNTS else None)
+            pairs.setdefault((column, metric), [None, None])[side] = value
+    return [
+        _Comparison(table, column, metric, a, b,
+                    "OK" if a == b else "DEVIATION")
+        for (column, metric), (a, b) in sorted(pairs.items())
+    ], uncompared
+
+
+def _pair_plan(
+    left: DataFrame, right: DataFrame, distinct_mode: str
+) -> tuple[DataFrame, dict[str, tuple[str, int | None]], list[str]]:
+    """:func:`validate_pair`'s one plan, unexecuted: ``(wide, owner,
+    uncompared)`` — the per-side metric rows, the union column → (source
+    column, owning side or None for both) map, and the one-sided
+    columns."""
     from database_migration_spark.functions.parallel import fan_out
 
     rset, lset = set(right.columns), set(left.columns)
@@ -400,31 +446,15 @@ def validate_pair(
     both = left.select(*lsel).union(right.select(*rsel))
     plain, distinct = metric_exprs(both, list(owner), distinct_mode)
     if distinct:
-        # as compute_metrics_wide: both aggregates read one fanned exchange
-        both = fan_out(both)
+        # as compute_metrics_wide: both aggregates read one fanned
+        # exchange once the Expand's work reaches one split
+        both = fan_out(both, min_bytes=expand_fan_floor(len(distinct)))
         wide = both.groupBy("__side").agg(*plain).join(
             both.groupBy("__side").agg(*distinct), "__side"
         )
     else:
         wide = both.groupBy("__side").agg(*plain)
-    got = {r["__side"]: r for r in wide.collect()}
-
-    # (column, metric) -> [value_a, value_b]; a metric only one side's type
-    # has keeps NULL on the other, as the full outer join does
-    pairs: dict[tuple[str, str], list] = {}
-    for field in wide.columns[1:]:
-        metric, _, ucol = field.partition("__")
-        column, only = owner.get(ucol, ("", None))  # ROW_CNT: no column
-        for side in ((0, 1) if only is None else (only,)):
-            row = got.get(side)
-            value = (row[field] if row is not None
-                     else "0" if metric in _COUNTS else None)
-            pairs.setdefault((column, metric), [None, None])[side] = value
-    return [
-        _Comparison(table, column, metric, a, b,
-                    "OK" if a == b else "DEVIATION")
-        for (column, metric), (a, b) in sorted(pairs.items())
-    ], uncompared
+    return wide, owner, uncompared
 
 
 # ---------------------------------------------------------------------------

@@ -36,6 +36,7 @@ from database_migration_spark.operators.validate import (
 )
 from database_migration_spark.plans.ddl import generate_migration_plan
 from database_migration_spark.plans.statement_stream import MigrationPlan
+from database_migration_spark.sources.parquet_source import read_parquet_portable
 from database_migration_spark.typemap import TypeMapPolicy, map_columns
 
 
@@ -197,7 +198,8 @@ class MigrationRunner:
             else:
                 target_path = f"{target_dir}/{t.table}"
             src.write.mode("overwrite").parquet(target_path)
-            tgt = self.spark.read.parquet(target_path)
+            # the written schema from the footer: no inference job
+            tgt = read_parquet_portable(self.spark, target_path)
             if not validate:
                 n = tgt.count()
                 self.logger.log(f"copy {t.table}", "done", qualified, rows=n)

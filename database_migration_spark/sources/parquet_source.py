@@ -18,6 +18,7 @@ timestamp_ns → timestamp, so external oracles agree.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -77,7 +78,10 @@ def nanos_timestamp_columns(path: str) -> list[str]:
     rebuild and fail analysis. Only true INT64 nanos columns qualify."""
     import pyarrow.parquet as pq
 
-    sch = pq.ParquetFile(path).schema
+    return _nanos_columns(pq.ParquetFile(path).schema)
+
+
+def _nanos_columns(sch) -> list[str]:
     out = []
     for i in range(len(sch)):
         c = sch.column(i)
@@ -92,15 +96,33 @@ def nanos_timestamp_columns(path: str) -> list[str]:
     return out
 
 
+# the footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def read_parquet_portable(spark: SparkSession, path: str, nanos_sidecar: bool = True) -> DataFrame:
     """Read parquet that may contain TIMESTAMP(NANOS) columns.
 
     Plain read when none; otherwise reads nanos as long (runtime conf) and
     rebuilds: ``col`` = µs-truncated timestamp, ``col_ns`` = exact int64 nanos.
+
+    A plain read of files Spark wrote takes its schema from the first
+    footer's Spark row schema: the schema inference would pick, without
+    the inference job a bare ``spark.read.parquet`` runs. The file source
+    makes every field of a given schema nullable, as it does an inferred
+    one, and still discovers partition columns from the directory names.
+    Other writers' files are inferred.
     """
-    ns_cols = nanos_timestamp_columns(_first_parquet_file(path))
+    import pyarrow.parquet as pq
+
+    footer = pq.read_metadata(_first_parquet_file(path))
+    ns_cols = _nanos_columns(footer.schema)
     if not ns_cols:
-        return spark.read.parquet(path)
+        stored = (footer.metadata or {}).get(_SPARK_ROW_SCHEMA)
+        if stored is None:
+            return spark.read.parquet(path)
+        schema = T.StructType.fromJson(json.loads(stored))
+        return spark.read.schema(schema).parquet(path)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in ns_cols:
@@ -116,13 +138,22 @@ def read_parquet_portable(spark: SparkSession, path: str, nanos_sidecar: bool = 
 
 
 def _first_parquet_file(path: str) -> str:
+    """The first data file Spark's listing would read under ``path``:
+    names starting with ``.`` or ``_`` are hidden from it (swap aside
+    copies, ``_temporary``, ``_SUCCESS``), except ``_col=value`` partition
+    directories."""
     if os.path.isfile(path):
         return path
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not _hidden(d))
         for f in sorted(files):
-            if f.endswith(".parquet"):
+            if f.endswith(".parquet") and not _hidden(f):
                 return os.path.join(root, f)
     return path
+
+
+def _hidden(name: str) -> bool:
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
 
 
 # The testdata "source database" ships no constraint metadata in its parquet

@@ -31,6 +31,8 @@ Flags: --x100 (third decade), --ann, --bm25, --semantic-bits, --skew-demo,
 join_cardinality, image_near_dup),
 --image-index (round-12 incremental image store: indexed crawl-batch
 probe vs the index-free signature self-join; +x100 with --x100),
+--validate-fan (validate_pair's gated fan vs a forced fan on lineitem
+at sf0.01 / sf0.1 / x10, interleaved cold pairs),
 --no-queries (skip the main sweep for flag-only runs).
 Writes the corpus under .scale/x10/ (gitignored) and prints one JSON line
 with sf0.1 and 10x timings per operator; SCALE.md records the results.
@@ -1159,6 +1161,76 @@ def cdc_surgical_probe(spark, partitions: int = 256) -> dict:
     return out
 
 
+def validate_fan_probe(spark, pairs: int = 3) -> dict:
+    """Single-table ``validate_pair`` on lineitem: the gated fan decision
+    (fan only when the Expand's estimated volume reaches one split)
+    against a forced round-robin fan, per scale. Interleaved cold pairs
+    after one discard lap per arm (clearCache + gc before every lap, the
+    arm that runs first alternates); each leg reports min and median,
+    whether the gate and the size-blind partition-count rule would fan,
+    and the compared row count as its guard. The fan is forced by
+    patching ``parallel._should_fan``, so both arms run the same
+    metric plan code."""
+    import statistics
+
+    from database_migration_spark.functions import parallel
+    from database_migration_spark.operators.validate import (
+        METRIC_ROW_CNT,
+        _pair_plan,
+        validate_pair,
+    )
+
+    def fans(left, right) -> bool:
+        plan = _pair_plan(left, right, "exact")[0]
+        return "RoundRobin" in plan._jdf.queryExecution().executedPlan().toString()
+
+    gate = parallel._should_fan
+    legs = {}
+    sf001 = os.path.join(os.path.dirname(SF01), "sf0.01")
+    for leg, root in (("sf0.01", sf001), ("sf0.1", SF01), ("x10", OUT)):
+        path = os.path.join(root, "lineitem.parquet")
+        left, right = spark.read.parquet(path), spark.read.parquet(path)
+
+        def lap(forced: bool) -> tuple[float, str]:
+            spark.catalog.clearCache()
+            spark.sparkContext._jvm.System.gc()
+            if forced:
+                parallel._should_fan = lambda *_a, **_k: True
+            try:
+                t0 = time.time()
+                rows, _unc = validate_pair(left, right, "lineitem")
+                sec = time.time() - t0
+            finally:
+                parallel._should_fan = gate
+            if any(r.status == "DEVIATION" for r in rows):
+                raise RuntimeError(f"{leg}: lineitem deviates from itself")
+            cnt = next(r for r in rows if r.metric == METRIC_ROW_CNT)
+            return sec, cnt.value_a
+
+        lap(False), lap(True)  # discard laps: page cache + JIT for both arms
+        times = {False: [], True: []}
+        for i in range(pairs):
+            for forced in ((False, True) if i % 2 == 0 else (True, False)):
+                sec, n_rows = lap(forced)
+                times[forced].append(sec)
+        parallel._should_fan = lambda df, target, min_bytes=0: gate(df, target)
+        try:
+            size_blind = fans(left, right)
+        finally:
+            parallel._should_fan = gate
+        legs[leg] = {
+            "rows": int(n_rows),
+            "scan_partitions": left.rdd.getNumPartitions(),
+            "gate_fans": fans(left, right),
+            "size_blind_rule_fans": size_blind,
+            "gated_min_sec": round(min(times[False]), 3),
+            "gated_median_sec": round(statistics.median(times[False]), 3),
+            "forced_fan_min_sec": round(min(times[True]), 3),
+            "forced_fan_median_sec": round(statistics.median(times[True]), 3),
+        }
+    return legs
+
+
 def main() -> int:
     from database_migration_spark import get_spark
     from database_migration_spark import queries as Q
@@ -1527,7 +1599,7 @@ def main() -> int:
         # Self-contained: generates its own x100 lineitem if missing.
         from pyspark.sql import functions as F  # noqa: F811
 
-        from database_migration_spark.functions.parallel import fan_out
+        from database_migration_spark.functions.parallel import SPLIT_BYTES, fan_out
         from database_migration_spark.operators.constraints import pk_check
 
         if not os.path.exists(os.path.join(OUT100, "lineitem.parquet")):
@@ -1552,9 +1624,7 @@ def main() -> int:
                 ),
             )
 
-        fanned_df = fan_out(
-            li.selectExpr(keys), key=keys, min_bytes=128 * 1024 * 1024
-        )
+        fanned_df = fan_out(li.selectExpr(keys), key=keys, min_bytes=SPLIT_BYTES)
         # interleaved cold pairs: a sequential A-then-B ordering hands B
         # the page cache A just warmed (first run recorded a 2x phantom).
         g_laps, u_laps = [], []
@@ -1568,6 +1638,8 @@ def main() -> int:
             "gated_sec": round(min(g_laps), 3),
             "unfanned_sec": round(min(u_laps), 3),
         }
+    if "--validate-fan" in sys.argv:
+        out["validate_fan"] = validate_fan_probe(spark)
     if "--overlap" in sys.argv:
         out["overlap"] = overlap_probe(
             spark, Q, with_x100="--x100" in sys.argv

@@ -376,3 +376,22 @@ def test_fan_out_decision_memo(spark, monkeypatch):
     assert len(calls) == 2
     assert a.rdd.getNumPartitions() > 1 and b.rdd.getNumPartitions() > 1
     assert a.count() == docs.count()
+
+
+def test_fan_floor_decides_known_small_without_partition_probe(spark, monkeypatch):
+    """Under ``min_bytes`` the size estimate alone decides: the input
+    passes through with no plan→RDD partition probe. Above it, the
+    estimate (an upper bound) decides nothing and the probe runs."""
+    from database_migration_spark.functions import parallel
+
+    docs = Q.table(spark, SF, "documents").select("doc_id", "text")
+
+    def no_probe(_df):
+        raise AssertionError("partition probe ran")
+
+    monkeypatch.setattr(type(docs), "rdd", property(no_probe))
+    assert parallel.size_estimate(docs) < parallel.SPLIT_BYTES
+    assert not parallel._should_fan(docs, 4, min_bytes=parallel.SPLIT_BYTES)
+    assert parallel.fan_out(docs, min_bytes=parallel.SPLIT_BYTES) is docs
+    with pytest.raises(AssertionError, match="partition probe ran"):
+        parallel._should_fan(docs, 4, min_bytes=1)

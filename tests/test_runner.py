@@ -94,6 +94,58 @@ def test_nanos_sidecar_roundtrip(spark, tmp_path):
         assert us[i] == ns // 1000
 
 
+def test_portable_read_takes_spark_footer_schema(spark, tmp_path):
+    """A Spark-written dataset reads with its footer's row schema — no
+    schema-inference job — and that schema equals plain inference, the
+    partition column and nullability included."""
+    import uuid
+
+    from database_migration_spark.sources.parquet_source import (
+        read_parquet_portable,
+    )
+
+    path = str(tmp_path / "store")
+    spark.range(12).selectExpr(
+        "id", "cast(id % 3 AS INT) AS _pt", "array(id) AS a",
+        "map('k', id) AS m", "named_struct('x', id) AS s",
+        "timestamp_ntz '2024-01-02 03:04:05' AS ts",
+    ).write.partitionBy("_pt").parquet(path)
+    sc = spark.sparkContext
+    group = f"portable-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "footer schema read", False)
+    try:
+        df = read_parquet_portable(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert df.schema == spark.read.parquet(path).schema
+    assert df.count() == 12
+
+
+def test_portable_read_skips_hidden_entries(spark, tmp_path):
+    """The footer comes from a file Spark's listing reads: a ``.``-prefixed
+    swap aside copy or a ``_temporary`` directory holding another schema
+    never supplies it."""
+    from database_migration_spark.sources.parquet_source import (
+        _first_parquet_file,
+        read_parquet_portable,
+    )
+
+    path = tmp_path / "store"
+    spark.range(6).selectExpr("id", "cast(id % 2 AS INT) AS _pt").write.partitionBy(
+        "_pt"
+    ).parquet(str(path))
+    other = spark.range(3).selectExpr("cast(id AS STRING) AS other")
+    for hidden in ("._pt=0.old", "_temporary"):
+        other.write.parquet(str(path / hidden))
+    first = _first_parquet_file(str(path))
+    assert "/_pt=" in first and ".old" not in first and "_temporary" not in first
+    df = read_parquet_portable(spark, str(path))
+    assert df.columns == ["id", "_pt"]
+    assert sorted(r.id for r in df.collect()) == list(range(6))
+
+
 def test_verify_primary_key(spark, sf_smoke):
     orders = spark.read.parquet(f"{sf_smoke}/orders.parquet")
     assert verify_primary_key(orders, ["o_orderkey"])["holds"]

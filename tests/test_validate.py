@@ -110,15 +110,14 @@ def _mixed_types(spark):
     return left, right
 
 
-@pytest.mark.parametrize("case", [
+PAIR_CASES = [
     "identical", "corrupted", "mixed_types", "empty_right", "empty_left",
     "one_sided", "approx",
-])
-def test_validate_pair_matches_two_plan_compare(spark, sf_smoke, case):
-    """validate_pair's one-plan rows equal the lazy two-plan compare
-    (compute_metrics on each side, compare_metrics) as sets, and the
-    one-sided columns come back as ``uncompared`` in left-then-right
-    order."""
+]
+
+
+def _pair_case(spark, sf_smoke, case):
+    """(left, right, distinct_mode, expected uncompared) for one case."""
     li = spark.read.parquet(f"{sf_smoke}/lineitem.parquet")
     left, right, mode, uncompared = li, li.select(*li.columns), "exact", []
     if case == "corrupted":
@@ -135,6 +134,16 @@ def test_validate_pair_matches_two_plan_compare(spark, sf_smoke, case):
         uncompared = ["only_left", "l_tax", "only_right"]
     elif case == "approx":
         mode = "approx"
+    return left, right, mode, uncompared
+
+
+@pytest.mark.parametrize("case", PAIR_CASES)
+def test_validate_pair_matches_two_plan_compare(spark, sf_smoke, case):
+    """validate_pair's one-plan rows equal the lazy two-plan compare
+    (compute_metrics on each side, compare_metrics) as sets, and the
+    one-sided columns come back as ``uncompared`` in left-then-right
+    order."""
+    left, right, mode, uncompared = _pair_case(spark, sf_smoke, case)
     rows, unc = validate_pair(left, right, "t", distinct_mode=mode)
     assert unc == uncompared
     assert all(r.table_name == "t" for r in rows)
@@ -156,9 +165,77 @@ def test_validate_pair_matches_two_plan_compare(spark, sf_smoke, case):
         assert by[("k", "SUM_VAL")].status == "OK"
 
 
+def _fan_invariant(monkeypatch, left, right, mode):
+    """validate_pair's rows with the fan forced on and forced off."""
+    from database_migration_spark.functions import parallel
+
+    out = []
+    for fan in (True, False):
+        monkeypatch.setattr(parallel, "_should_fan", lambda *_a, f=fan: f)
+        out.append(validate_pair(left, right, "t", distinct_mode=mode))
+    return out
+
+
+@pytest.mark.parametrize("case", PAIR_CASES)
+def test_validate_pair_rows_fan_invariant(spark, sf_smoke, monkeypatch, case):
+    """The fan decision is performance only: fanned and unfanned plans
+    give identical comparison rows and uncompared columns."""
+    left, right, mode, _unc = _pair_case(spark, sf_smoke, case)
+    fanned, unfanned = _fan_invariant(monkeypatch, left, right, mode)
+    assert fanned == unfanned
+
+
+@pytest.mark.parametrize("table", [
+    "customer", "documents", "embeddings", "events", "lineitem", "nation",
+    "orders", "part", "region", "supplier",
+])
+def test_validate_pair_fixture_tables_fan_invariant(
+    spark, sf_smoke, monkeypatch, table
+):
+    """Each fixture table validates clean against a copy of itself, with
+    the same rows fanned and unfanned."""
+    from database_migration_spark.sources.parquet_source import ParquetSource
+
+    df = ParquetSource(spark, sf_smoke).read(table)
+    fanned, unfanned = _fan_invariant(monkeypatch, df, df.select(*df.columns), "exact")
+    assert fanned == unfanned
+    assert all(r.status == "OK" for r in fanned[0])
+
+
+def _fans(df) -> bool:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "RoundRobinPartitioning" in plan
+
+
+def test_validate_pair_fans_only_when_expand_reaches_one_split(spark, sf_t2):
+    """The metric plan fans only once the Expand's volume — size
+    estimate × COUNT(DISTINCT) aggregates — reaches one split. Plans are
+    built, never run."""
+    from database_migration_spark.functions.parallel import SPLIT_BYTES
+    from database_migration_spark.operators.validate import (
+        _pair_plan,
+        compute_metrics_wide,
+        expand_fan_floor,
+    )
+
+    assert expand_fan_floor(1) == SPLIT_BYTES
+    assert expand_fan_floor(3) * 3 >= SPLIT_BYTES > (expand_fan_floor(3) - 1) * 3
+    # the largest fixture table: a single-row-group scan, far under a split
+    li = spark.read.parquet(f"{sf_t2}/lineitem.parquet")
+    assert li.rdd.getNumPartitions() == 1
+    assert not _fans(_pair_plan(li, li, "exact")[0])
+    assert not _fans(compute_metrics_wide(li))
+    # one single-partition column of 2^24 longs: ≈ 335 MB estimated
+    big = spark.range(0, 1 << 24, 1, 1)
+    assert _fans(_pair_plan(big, big, "exact")[0])
+    assert _fans(compute_metrics_wide(big))
+    # HLL mode has no Expand and no fan
+    assert not _fans(_pair_plan(big, big, "approx")[0])
+
+
 def test_validate_pair_job_budget(spark, sf_smoke):
     """One validate_pair is one Spark action: the sf_smoke lineitem pair
-    runs at most 6 jobs (the two-plan compare ran 11)."""
+    runs at most 5 jobs (the two-plan compare ran 11)."""
     import uuid
 
     sc = spark.sparkContext
@@ -174,4 +251,4 @@ def test_validate_pair_job_budget(spark, sf_smoke):
     # job starts reach the status tracker through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 6
+    assert 0 < len(jobs) <= 5
