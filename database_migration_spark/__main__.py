@@ -772,9 +772,8 @@ def cmd_scd2(args) -> int:
     Bootstraps on first run; each later run closes changed entities' open
     versions and opens new ones. The version timestamp is --ts or the
     previous maximum valid_from + 1 (a BIGINT version counter)."""
-    import os
-
     from database_migration_spark.operators.scd2 import (
+        check_close_missing,
         scd2_bootstrap,
         scd2_merge,
     )
@@ -808,76 +807,38 @@ def cmd_scd2(args) -> int:
     attrs = [by_upper.get(a.upper(), a) for a in attrs]
     from pyspark.sql import functions as F
 
-    from database_migration_spark.functions.io import (
-        PT_COL,
-        affected_partitions,
-        publish_parquet,
-        store_has_partitions,
-    )
+    from database_migration_spark.functions.io import keyed_epoch
+
+    ts = args.ts
+
+    def merge(cur, batch):
+        nonlocal ts
+        if cur is None:
+            ts = 0 if ts is None else ts
+            return scd2_bootstrap(batch.select(*keys, *attrs), keys, attrs,
+                                  ts)
+        if ts is None:
+            # over the WHOLE dimension: a partitioned store hands the
+            # merge only the touched slice, whose maximum can lag. The
+            # slice's schema spares this re-read a schema-inference job.
+            whole = spark.read.schema(cur.schema).parquet(args.target)
+            ts = (whole.agg(F.max("valid_from")).collect()[0][0] or 0) + 1
+        return scd2_merge(cur, batch, keys, attrs, ts,
+                          close_missing=args.close_missing)
 
     try:
-        n_pt = store_meta.resolve(
-            args.target, "target",
-            {"partitions": args.partitions, "keys": keys}, {},
-        )["partitions"]
+        check_close_missing(args.target, args.partitions, args.close_missing)
+        committed, bootstrapped = keyed_epoch(
+            spark, args.target, args.target + ".scd2-tmp", keys,
+            args.partitions, source, merge,
+        )
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
         return 2
-    if n_pt is not None and args.close_missing:
-        print("error: --close-missing touches every dimension key (a "
-              "snapshot feed) — partition-surgical maintenance cannot "
-              "help; use the unpartitioned layout", file=sys.stderr)
-        return 2
-    if n_pt is not None:
-        # the source feeds two consumers (touched-partition derivation +
-        # the merge) — persist for the command's lifetime
-        from pyspark import StorageLevel
-
-        source = source.persist(StorageLevel.MEMORY_AND_DISK)
-        affected = affected_partitions(source, keys, n_pt)
-        exists = store_has_partitions(args.target)
-    else:
-        affected = None
-        exists = os.path.exists(args.target)
-    if not exists:
-        ts = args.ts if args.ts is not None else 0
-        dim = scd2_bootstrap(source.select(*keys, *attrs), keys, attrs, ts)
-        action = "bootstrap"
-    else:
-        cur = spark.read.parquet(args.target)
-        ts = (
-            args.ts
-            if args.ts is not None
-            else (cur.agg(F.max("valid_from")).collect()[0][0] or 0) + 1
-        )
-        if n_pt is not None:
-            cur = cur.where(F.col(PT_COL).isin(affected)).drop(PT_COL)
-        try:
-            dim = scd2_merge(cur, source, keys, attrs, ts,
-                             close_missing=args.close_missing)
-        except ValueError as e:
-            print(f"error: {e}", file=sys.stderr)
-            return 2
-        action = "merge"
-    if n_pt is not None:
-        # key-hash layout: rewrite + swap ONLY the partitions the source
-        # batch touches — derived from the batch's keys alone (the
-        # stream_scd2(partitions=) machinery); the meta-first bootstrap
-        # and the empty-bootstrap skip live in publish_surgical, shared
-        # with cmd_cdc
-        from database_migration_spark.functions.io import publish_surgical
-
-        committed = publish_surgical(
-            dim, args.target, args.target + ".scd2-tmp",
-            keys, n_pt, affected, bootstrapping=not exists,
-        )
-        source.unpersist()
-        if not committed:
-            print(f"{args.table}: source is empty — dimension not "
-                  "created")
-            return 0
-    else:
-        publish_parquet(dim, args.target, args.target + ".scd2-tmp")
+    if not committed:
+        print(f"{args.table}: source is empty — dimension not created")
+        return 0
+    action = "bootstrap" if bootstrapped else "merge"
     final = spark.read.parquet(args.target)
     n_open = final.where("is_current").count()
     n_all = final.count()
@@ -1464,80 +1425,32 @@ def cmd_cdc(args) -> int:
     if args.dry_run:
         print("-- dry run; target untouched", file=sys.stderr)
         return 0
-    import os
+    from database_migration_spark.functions.io import keyed_epoch, read_keyed
 
-    from pyspark.sql import functions as F
-
-    from database_migration_spark.functions.io import (
-        PT_COL,
-        publish_parquet,
-        store_has_partitions,
-    )
+    def merge(base, feed):
+        if base is None:
+            # bootstrap: an empty base with the feed's business columns
+            base = feed.drop(args.seq_col, args.op_col).limit(0)
+        return apply_cdc(base, feed, keys, args.seq_col, args.op_col)
 
     try:
-        n_pt = store_meta.resolve(
-            args.target, "target",
-            {"partitions": args.partitions, "keys": keys}, {},
-        )["partitions"]
+        committed, _ = keyed_epoch(
+            spark, args.target, args.target + ".cdc-tmp", keys,
+            args.partitions, events, merge,
+        )
     except ValueError as e:
         print(f"error: {e}", file=sys.stderr)
         return 2
-    if n_pt is not None:
-        # the feed feeds two consumers (touched-partition derivation +
-        # the apply) — persist for the command's lifetime; meta-first
-        # bootstrap means a meta-only dir is an EMPTY store, so existence
-        # is "holds partitions", never "directory present"
-        from pyspark import StorageLevel
-
-        from database_migration_spark.functions.io import (
-            affected_partitions,
-        )
-
-        events = events.persist(StorageLevel.MEMORY_AND_DISK)
-        affected = affected_partitions(events, keys, n_pt)
-        exists = store_has_partitions(args.target)
-    else:
-        affected = None
-        exists = os.path.exists(args.target)
-    if exists:
-        base = spark.read.parquet(args.target)
-        if n_pt is not None:
-            # key-hash layout: only the partitions the feed's keys touch
-            # join the apply and rewrite (the stream_cdc_apply machinery)
-            base = base.where(F.col(PT_COL).isin(affected)).drop(PT_COL)
-    else:
-        # bootstrap: an empty base with the feed's business columns
-        base = events.drop(args.seq_col, args.op_col).limit(0)
-    try:
-        merged = apply_cdc(base, events, keys, args.seq_col, args.op_col)
-    except ValueError as e:
-        print(f"error: {e}", file=sys.stderr)
-        return 2
-    if n_pt is not None:
-        from database_migration_spark.functions.io import publish_surgical
-
-        committed = publish_surgical(
-            merged, args.target, args.target + ".cdc-tmp",
-            keys, n_pt, affected, bootstrapping=not exists,
-        )
-        events.unpersist()
-        if not committed:
-            # a delete-only first feed nets to zero rows: nothing to
-            # write and no layout to commit (publish_surgical's
-            # empty-bootstrap rule)
-            print("target now has 0 rows (feed netted to nothing; "
-                  "target not created)")
-            return 0
-    else:
-        publish_parquet(merged, args.target, args.target + ".cdc-tmp")
+    if not committed:
+        # a delete-only first feed nets to zero rows: nothing to write
+        # and no layout to commit
+        print("target now has 0 rows (feed netted to nothing; "
+              "target not created)")
+        return 0
     # a partitioned store CAN legally end up with zero partitions (a feed
-    # that deleted every key) — parquet cannot infer a schema from the
-    # meta-only directory, so count it as zero instead of crashing
-    n = (
-        spark.read.parquet(args.target).count()
-        if n_pt is None or store_has_partitions(args.target)
-        else 0
-    )
+    # that deleted every key): read_keyed reports it as no rows
+    final = read_keyed(spark, args.target)
+    n = 0 if final is None else final.count()
     print(f"target now has {n} rows")
     return 0
 

@@ -16,6 +16,15 @@ drop the aside copy. Every store commit calls it:
   ``.`` name is hidden from Spark's listing of ``path``, whereas an
   ``_pt=1.old`` directory would be read as a partition value.
 
+A keyed store (a CDC target or an SCD2 dimension, plain or laid out by
+key hash) is maintained only by :func:`keyed_epoch`: it resolves the
+layout, reads the touched base, merges the delta and commits through
+:func:`publish_keyed`, the one place that holds the meta-first
+bootstrap, the empty-bootstrap skip and the local-path guard. Every
+maintainer (CLI ``cdc``/``scd2``, ``stream_cdc_apply``,
+``stream_scd2``) calls it; tombstone compaction, whose partitions come
+from a scan rather than a delta, calls :func:`publish_keyed` alone.
+
 Crash contract: no generation is deleted before its replacement is in
 place. A crash between the two renames leaves BOTH generations on disk
 (aside and staged) with ``path``, or that partition, briefly absent; a
@@ -34,7 +43,9 @@ from __future__ import annotations
 import os
 import shutil
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from database_migration_spark.functions import store_meta
 
@@ -98,8 +109,6 @@ def pt_expr(keys: list, n_partitions: int):
     sessions, the exact-arithmetic rule) and integer-exact (pmod, never
     float division). NULL key parts hash as empty (concat_ws skips them):
     deterministic per key, which is all a layout needs."""
-    from pyspark.sql import functions as F
-
     from database_migration_spark.functions.hashing import md5_long
 
     parts = [F.col(k).cast("string") for k in keys]
@@ -197,21 +206,45 @@ def publish_partitions(
     shutil.rmtree(staging, ignore_errors=True)
 
 
-def publish_surgical(
+def store_has_partitions(path: str) -> bool:
+    """Whether a key-hash-partitioned store holds any data yet: at least
+    one ``_pt=*`` directory. The EXISTENCE test for partitioned targets —
+    a directory holding only ``_target_meta.json`` is an empty store
+    mid-bootstrap (meta writes first), not a readable dataset."""
+    if not os.path.isdir(path):
+        return False
+    return any(e.startswith(f"{PT_COL}=") for e in os.listdir(path))
+
+
+def affected_partitions(df: DataFrame, keys: list, n_partitions: int) -> list:
+    """The partitions a delta's KEYS touch, derived from the delta alone
+    (the store is never scanned to find them): sorted distinct pt values —
+    driver-bounded by ``n_partitions``."""
+    return sorted(
+        r[0]
+        for r in df.select(pt_expr(keys, n_partitions).alias(PT_COL))
+        .distinct()
+        .collect()
+    )
+
+
+def publish_keyed(
     result: DataFrame,
     path: str,
     staging: str,
     keys: list,
-    n_partitions: int,
-    affected: list,
+    n_partitions: int | None,
+    affected: list | None,
     bootstrapping: bool,
 ) -> bool:
-    """Commit ``result`` (the new content of ONLY the ``affected``
-    partitions, WITHOUT the layout column — it is attached here) to a
-    key-hash-partitioned store. The two crash/degenerate rules both CLI
-    maintainers (cdc, scd2) must share live here so they cannot drift
-    (they had: the empty-bootstrap guard landed in one and not the
-    other — review finding):
+    """The one commit step of a keyed store. With ``n_partitions=None``
+    the store is plain parquet and ``result`` replaces it whole
+    (:func:`publish_parquet`). Otherwise ``result`` is the new content of
+    ONLY the ``affected`` partitions, WITHOUT the layout column (it is
+    attached here), and the two crash/degenerate rules every maintainer
+    must share live here so they cannot drift (they had: the
+    empty-bootstrap guard once landed in one CLI command and not the
+    other):
 
     - An EMPTY bootstrap commits NOTHING and returns False: a meta-only
       store makes every later parquet read crash, so the target simply
@@ -219,6 +252,9 @@ def publish_surgical(
     - A real bootstrap writes ``_target_meta.json`` BEFORE the data, so
       a crash between the two replays cleanly (meta-only dir == empty
       store by the ``store_has_partitions`` existence test)."""
+    if n_partitions is None:
+        publish_parquet(result, path, staging)
+        return True
     _require_local(path, staging)  # before the meta write creates "s3:/…"
     if bootstrapping and result.isEmpty():
         return False
@@ -233,25 +269,53 @@ def publish_surgical(
     return True
 
 
-def store_has_partitions(path: str) -> bool:
-    """Whether a key-hash-partitioned store holds any data yet: at least
-    one ``_pt=*`` directory. The EXISTENCE test for partitioned targets —
-    a directory holding only ``_target_meta.json`` is an empty store
-    mid-bootstrap (meta writes first), not a readable dataset."""
-    if not os.path.isdir(path):
-        return False
-    return any(e.startswith(f"{PT_COL}=") for e in os.listdir(path))
+def read_keyed(spark, path: str, partitioned: bool | None = None):
+    """The stored rows of a keyed store, or None while it holds no data:
+    a missing path, or a partitioned store that is only its meta (an
+    empty store: mid-bootstrap, or every key deleted), which parquet
+    cannot read. ``partitioned`` is the caller's resolved layout; None
+    reads it from the stored meta."""
+    if partitioned is None:
+        partitioned = store_meta.read(path, "target") is not None
+    held = store_has_partitions(path) if partitioned else os.path.exists(path)
+    return spark.read.parquet(path) if held else None
 
 
-def affected_partitions(df: DataFrame, keys: list, n_partitions: int) -> list:
-    """The partitions a delta's KEYS touch, derived from the delta alone
-    (the store is never scanned to find them): sorted distinct pt values —
-    driver-bounded by ``n_partitions``. The single implementation behind
-    every surgical maintainer (round-9 review: four call sites had
-    copy-pasted the collect)."""
-    return sorted(
-        r[0]
-        for r in df.select(pt_expr(keys, n_partitions).alias(PT_COL))
-        .distinct()
-        .collect()
-    )
+def keyed_epoch(
+    spark, path: str, staging: str, keys: list, partitions: int | None,
+    delta: DataFrame, merge,
+) -> tuple:
+    """One maintenance epoch of the keyed store at ``path`` — the plain-
+    parquet form of the reference's staged-delta MERGE: resolve the
+    layout (the stored meta wins, a contradiction raises), read the base,
+    ``merge(base, delta)`` it (``base`` None means bootstrap) and commit
+    through :func:`publish_keyed`.
+
+    On a partitioned store the delta is persisted for the epoch (it feeds
+    the touched-partition collect and the merge), the touched partitions
+    come from the delta's keys alone (the store is never scanned to find
+    them), and ``base`` is only their slice, without the layout column:
+    cost tracks |delta| + |touched partitions|, not |store|. ``merge``
+    must pass every base key the delta does not mention through, since
+    the partitions it returns replace the stored ones whole.
+
+    Returns ``(committed, bootstrapped)``."""
+    n_pt = store_meta.resolve(
+        path, "target", {"partitions": partitions, "keys": keys}, {}
+    )["partitions"]
+    partitioned = n_pt is not None
+    if partitioned:
+        delta = delta.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        affected = affected_partitions(delta, keys, n_pt) if partitioned else None
+        base = read_keyed(spark, path, partitioned)
+        if base is not None and partitioned:
+            base = base.where(F.col(PT_COL).isin(affected)).drop(PT_COL)
+        committed = publish_keyed(
+            merge(base, delta), path, staging, keys, n_pt, affected,
+            bootstrapping=base is None,
+        )
+        return committed, base is None
+    finally:
+        if partitioned:
+            delta.unpersist()

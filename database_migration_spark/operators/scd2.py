@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from database_migration_spark.functions import store_meta
+
 VERSION_COLS = ("valid_from", "valid_to", "is_current")
 
 
@@ -178,6 +180,23 @@ def scd2_bootstrap(
         F.lit(None).cast(t).alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
+
+
+def check_close_missing(dim_path: str, partitions, close_missing: bool) -> None:
+    """Raise when ``close_missing`` meets a key-hash layout, given as the
+    argument OR stored with the dimension: a snapshot feed touches every
+    key, so there is nothing to prune, and the surgical merge would
+    silently drop the soft deletes."""
+    if close_missing and (
+        partitions is not None
+        or store_meta.read(dim_path, "target") is not None
+    ):
+        raise ValueError(
+            "close_missing (--close-missing) touches every dimension key "
+            "— partition-surgical maintenance cannot help; use the "
+            "unpartitioned layout (no partitions, unpartitioned store) "
+            "for snapshot feeds"
+        )
 
 
 def as_of(dim: DataFrame, ts) -> DataFrame:

@@ -68,19 +68,15 @@ def stream_merge_upsert(
     rewrite (per-epoch cost ∝ |delta| + |touched partitions|, measured 8×
     at 15 M keys — SCALE.md round 9) and adds cross-batch seq fences."""
 
+    from database_migration_spark.functions.io import keyed_epoch
+
     def upsert(batch: DataFrame, epoch_id: int) -> None:
-        s = batch.sparkSession
-        import os
-
-        if os.path.exists(target_path):
-            target = s.read.parquet(target_path)
-            merged = merge_upsert(target, batch, keys)
-        else:
-            merged = batch
-        # stage then swap: a transactional format replaces this dance
-        from database_migration_spark.functions.io import publish_parquet
-
-        publish_parquet(merged, target_path, target_path + f".epoch{epoch_id}")
+        keyed_epoch(
+            batch.sparkSession, target_path,
+            target_path + f".epoch{epoch_id}", keys, None, batch,
+            lambda target, delta: delta if target is None
+            else merge_upsert(target, delta, keys),
+        )
 
     return (
         stream.writeStream.foreachBatch(upsert)
@@ -119,13 +115,13 @@ def stream_incremental_dedup(
     decisions_sink,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 5,
-    num_perm: int = 32,
-    bands: int = 4,
+    k: int | None = None,
+    num_perm: int | None = None,
+    bands: int | None = None,
     min_agree_permille: int = 750,
     checkpoint: str | None = None,
     store_index_path: str | None = None,
-    buckets: int = 64,
+    buckets: int | None = None,
 ):
     """Continuous crawl ingestion deduplicated against the historical
     corpus: each micro-batch is fingerprinted (content hash + minhash
@@ -165,11 +161,15 @@ def stream_incremental_dedup(
     layout instead of an in-memory store relation: each micro-batch probe
     then partition-prunes the store — the right economics when the store
     is corpus-scale and batches are small (the plain path re-reads the
-    whole store every epoch). ``buckets`` must match the index writer.
+    whole store every epoch). The batch then signs with the index's
+    stored shingle k, seed and num_perm, and probes with its stored bands
+    and buckets; an explicit value that contradicts the index raises. A
+    None parameter otherwise takes ``dedup.INDEX_DEFAULTS``.
     """
     from pyspark import StorageLevel
 
     from database_migration_spark.operators.dedup import (
+        INDEX_DEFAULTS,
         fingerprint_store,
         incremental_dedup,
         incremental_dedup_indexed,
@@ -177,6 +177,16 @@ def stream_incremental_dedup(
 
     if (store_fp is None) == (store_index_path is None):
         raise ValueError("exactly one of store_fp / store_index_path required")
+    given = {"shingle_k": k, "seed": None, "num_perm": num_perm,
+             "bands": bands, "buckets": buckets}
+    if store_index_path is not None:
+        p = store_meta.resolve(
+            store_index_path, "minhash", given, INDEX_DEFAULTS
+        )
+    else:
+        p = {n: INDEX_DEFAULTS[n] if v is None else v for n, v in given.items()}
+    k, seed, num_perm = p["shingle_k"], p["seed"], p["num_perm"]
+    bands, buckets = p["bands"], p["buckets"]
     if store_fp is not None:
         store_fp = store_fp.persist(StorageLevel.MEMORY_AND_DISK)
 
@@ -189,6 +199,7 @@ def stream_incremental_dedup(
             id_col=id_col,
             k=k,
             num_perm=num_perm,
+            seed=seed,
             persist=False,  # micro-batch: one redundant normalize beats a leak
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
@@ -352,90 +363,32 @@ def stream_scd2(
     EVERY key, so there is nothing to prune) and raises at construction.
     A transactional format (Delta/Iceberg) replaces both with MERGE INTO.
     """
-    from database_migration_spark.functions.io import (
-        PT_COL,
-        affected_partitions,
-        pt_expr,
-        publish_partitions,
-        store_has_partitions,
-        write_target_meta,
+    from database_migration_spark.functions.io import keyed_epoch
+    from database_migration_spark.operators.scd2 import (
+        check_close_missing,
+        scd2_bootstrap,
+        scd2_merge,
     )
 
-    # the layout can come from the argument OR from an existing store's
-    # meta — close_missing is incompatible with EITHER (a snapshot feed
-    # touches every key, so there is nothing to prune). Checking only the
-    # argument silently dropped the soft-delete semantics for a store
-    # bootstrapped partitioned earlier and streamed with partitions=None
-    # (review finding): the surgical branch runs scd2_merge with
-    # close_missing=False.
-    stored = store_meta.read(dim_path, "target")
-    if close_missing and (partitions is not None or stored is not None):
-        raise ValueError(
-            "close_missing touches every dimension key per epoch — "
-            "partition-surgical maintenance cannot help; use the "
-            "unpartitioned layout (partitions=None, unpartitioned store) "
-            "for snapshot feeds"
-        )
+    check_close_missing(dim_path, partitions, close_missing)
 
     def apply(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        import os
-
-        from database_migration_spark.operators.scd2 import (
-            scd2_bootstrap,
-            scd2_merge,
-        )
-
-        s = batch.sparkSession
         ts = int(epoch_id) if batch_ts_of is None else batch_ts_of(epoch_id, batch)
-        n_pt = store_meta.resolve(
-            dim_path, "target", {"partitions": partitions, "keys": keys}, {}
-        )["partitions"]
-        if n_pt is not None:
-            # the batch feeds two consumers (touched-partition collect +
-            # the merge) — persist for the epoch, unpersist in the
-            # finally (the stream_cdc_apply convention)
-            from pyspark import StorageLevel
 
-            batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                # touched partitions from the batch's keys alone — the
-                # dimension is never scanned to find them
-                affected = affected_partitions(batch, keys, n_pt)
-                exists = store_has_partitions(dim_path)
-                if exists:
-                    dim = s.read.parquet(dim_path).where(
-                        F.col(PT_COL).isin(affected)
-                    )
-                    merged = scd2_merge(
-                        dim.drop(PT_COL), batch, keys, attrs, ts,
-                        close_missing=False, persist=False,
-                    )
-                else:
-                    write_target_meta(dim_path, keys, n_pt)  # meta FIRST
-                    merged = scd2_bootstrap(batch, keys, attrs, ts)
-                publish_partitions(
-                    merged.withColumn(PT_COL, pt_expr(keys, n_pt)),
-                    dim_path, dim_path + f".epoch{epoch_id}", affected,
-                )
-            finally:
-                batch.unpersist()
-            return
-        exists = os.path.exists(dim_path)
-        if exists:
-            dim = s.read.parquet(dim_path)
-            merged = scd2_merge(
-                dim, batch, keys, attrs, ts,
+        def merge(dim, delta):
+            if dim is None:
+                return scd2_bootstrap(delta, keys, attrs, ts)
+            return scd2_merge(
+                dim, delta, keys, attrs, ts,
                 close_missing=close_missing, persist=False,
             )
-        else:
-            merged = scd2_bootstrap(batch, keys, attrs, ts)
-        # staging copy dropped once swapped — a long-running stream would
-        # otherwise accumulate one full dimension copy per epoch
-        from database_migration_spark.functions.io import publish_parquet
 
-        publish_parquet(merged, dim_path, dim_path + f".epoch{epoch_id}")
+        keyed_epoch(
+            batch.sparkSession, dim_path, dim_path + f".epoch{epoch_id}",
+            keys, partitions, batch, merge,
+        )
 
     return (
         stream.writeStream.foreachBatch(apply)
@@ -772,26 +725,12 @@ def stream_cdc_apply(
     dances at 100 TB; the partitioned shape is the plain-parquet
     equivalent of its partition-level commit.
     """
-    from database_migration_spark.functions.io import (
-        PT_COL,
-        pt_expr,
-        publish_partitions,
-        store_has_partitions,
-        write_target_meta,
-    )
+    from database_migration_spark.functions.io import keyed_epoch
+    from database_migration_spark.operators.cdc import net_changes
 
     def apply(batch: DataFrame, epoch_id: int) -> None:
         if not batch.head(1):
             return
-        import os
-
-        from database_migration_spark.operators.cdc import net_changes
-
-        s = batch.sparkSession
-        n_pt = store_meta.resolve(
-            target_path, "target", {"partitions": partitions, "keys": keys},
-            {},
-        )["partitions"]
         net = net_changes(batch, keys, seq_col, op_col)
         base_cols = [c for c in batch.columns if c not in (seq_col, op_col)]
         rows = net.select(
@@ -799,67 +738,11 @@ def stream_cdc_apply(
             F.col(seq_col).cast("long").alias("_seq"),
             (F.col(op_col) == "D").alias("_deleted"),
         )
-        if n_pt is not None:
-            rows = rows.withColumn(PT_COL, pt_expr(keys, n_pt))
-        # partitioned stores write their meta BEFORE the data, so a
-        # meta-only directory is an EMPTY store mid-bootstrap, not a
-        # readable dataset — store_has_partitions is the existence test
-        exists = (
-            store_has_partitions(target_path)
-            if n_pt is not None
-            else os.path.exists(target_path)
+        keyed_epoch(
+            batch.sparkSession, target_path,
+            target_path + f".epoch{epoch_id}", keys, partitions, rows,
+            lambda tgt, delta: _fence_merge(tgt, delta, keys),
         )
-        affected = None
-        if n_pt is not None:
-            # delta feeds two consumers (affected-partition collect + the
-            # merge) — persist for the epoch, unpersist in the finally
-            # (operator-internal persists leak one entry per epoch)
-            from pyspark import StorageLevel
-
-            rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
-            # ONE touched-partition collect per epoch (rows already carry
-            # PT_COL, so this is the affected_partitions shape inlined on
-            # the persisted relation; both branches below reuse it)
-            affected = sorted(
-                r[0] for r in rows.select(PT_COL).distinct().collect()
-            )
-        try:
-            if exists and n_pt is not None:
-                tgt = s.read.parquet(target_path).where(
-                    F.col(PT_COL).isin(affected)
-                )
-                merged = _fence_merge(tgt, rows, keys)
-                publish_partitions(
-                    merged, target_path,
-                    target_path + f".epoch{epoch_id}", affected,
-                )
-            elif exists:
-                tgt = s.read.parquet(target_path)
-                merged = _fence_merge(tgt, rows, keys)
-                from database_migration_spark.functions.io import (
-                    publish_parquet,
-                )
-
-                publish_parquet(
-                    merged, target_path, target_path + f".epoch{epoch_id}"
-                )
-            elif n_pt is not None:
-                write_target_meta(target_path, keys, n_pt)  # meta FIRST
-                publish_partitions(
-                    rows, target_path, target_path + f".epoch{epoch_id}",
-                    affected,
-                )
-            else:
-                from database_migration_spark.functions.io import (
-                    publish_parquet,
-                )
-
-                publish_parquet(
-                    rows, target_path, target_path + f".epoch{epoch_id}"
-                )
-        finally:
-            if n_pt is not None:
-                rows.unpersist()
 
     return (
         stream.writeStream.foreachBatch(apply)
@@ -869,10 +752,13 @@ def stream_cdc_apply(
     )
 
 
-def _fence_merge(tgt: DataFrame, rows: DataFrame, keys: list[str]) -> DataFrame:
+def _fence_merge(tgt, rows: DataFrame, keys: list[str]) -> DataFrame:
     """The CDC fence + merge against a target (slice): events at or below
     the key's applied ``_seq`` are dropped (stale), survivors replace
-    their key's row, unmentioned target rows pass through."""
+    their key's row, unmentioned target rows pass through. A missing
+    target (None) is the bootstrap: every row lands."""
+    if tgt is None:
+        return rows
     fence = tgt.select(*keys, F.col("_seq").alias("_applied_seq"))
     fresh = (
         rows.join(fence, keys, "left")
@@ -904,40 +790,34 @@ def compact_cdc_target(
     identity. A plain target keeps the full stage-then-swap rewrite."""
     from database_migration_spark.functions.io import (
         PT_COL,
-        publish_parquet,
-        publish_partitions,
-        store_has_partitions,
+        publish_keyed,
+        read_keyed,
     )
 
-    partitioned = store_meta.read(target_path, "target") is not None
-    if partitioned and not store_has_partitions(target_path):
-        # a partitioned store can legally be empty (every key deleted and
-        # compacted away) — nothing to do, and the parquet read below
-        # would fail on the meta-only directory
+    # a partitioned store can legally be empty (every key deleted and
+    # compacted away): read_keyed reports that as None, before and after
+    meta = store_meta.read(target_path, "target") or {}
+    t = read_keyed(spark, target_path, bool(meta))
+    if t is None:
         return {"tombstones_before": 0, "tombstones_after": 0}
-    t = spark.read.parquet(target_path)
     expired = F.col("_deleted") & (F.col("_seq") < F.lit(int(min_live_seq)))
     before = t.where(F.col("_deleted")).count()
-    if partitioned:
+    kept, affected = t.where(~expired), None
+    if meta:
         affected = sorted(
             r[0]
             for r in t.where(expired).select(PT_COL).distinct().collect()
         )
-        if affected:
-            kept = t.where(F.col(PT_COL).isin(affected)).where(~expired)
-            publish_partitions(
-                kept, target_path, target_path + ".compact-tmp", affected
-            )
-    else:
-        kept = t.where(~expired)
-        publish_parquet(kept, target_path, target_path + ".compact-tmp")
-    # compaction can legally empty the store entirely (every key deleted
-    # and past the horizon): the swap deletes every _pt=* directory and
-    # the meta-only dir has no schema to read — report 0, don't crash
-    # AFTER the commit (review finding)
-    if partitioned and not store_has_partitions(target_path):
-        return {"tombstones_before": before, "tombstones_after": 0}
-    after = spark.read.parquet(target_path).where(F.col("_deleted")).count()
+        if not affected:  # nothing expired: every tombstone stays
+            return {"tombstones_before": before, "tombstones_after": before}
+        kept = kept.where(F.col(PT_COL).isin(affected)).drop(PT_COL)
+    publish_keyed(
+        kept, target_path, target_path + ".compact-tmp",
+        meta.get("keys"), meta.get("partitions"), affected,
+        bootstrapping=False,
+    )
+    t = read_keyed(spark, target_path, bool(meta))
+    after = 0 if t is None else t.where(F.col("_deleted")).count()
     return {"tombstones_before": before, "tombstones_after": after}
 
 

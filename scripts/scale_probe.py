@@ -235,12 +235,15 @@ X100_PROBES = [
 ]
 
 
+TABLES = ("documents", "lineitem", "embeddings", "events", "part",
+          "customer", "orders", "supplier", "nation", "region")
+
+
 def generate(
     spark,
     out: str | None = None,
     replicas: int | None = None,
-    tables: tuple = ("documents", "lineitem", "embeddings", "events", "part",
-                     "customer", "orders", "supplier", "nation", "region"),
+    tables: tuple = TABLES,
 ) -> None:
     """Derive a replicas× corpus from sf0.1. Replica structure mirrors the
     x10 design (see SCALE.md: per-replica word suffixes keep the duplicate
@@ -407,6 +410,20 @@ def generate(
         ).repartition(files).write.mode("overwrite").parquet(
             os.path.join(out, "events.parquet")
         )
+
+
+def x10(spark, *tables: str) -> str:
+    """OUT, after generating whichever of ``tables`` the ×10 set lacks
+    (no ``_SUCCESS`` marker: never written, or a write that died). A flag
+    study generates only the tables it reads; the whole set is the query
+    sweep's to generate."""
+    missing = tuple(
+        t for t in tables
+        if not os.path.exists(os.path.join(OUT, f"{t}.parquet", "_SUCCESS"))
+    )
+    if missing:
+        generate(spark, OUT, REPLICAS, tables=missing)
+    return OUT
 
 
 def time_thunk(spark, make) -> float:
@@ -600,7 +617,8 @@ def overlap_probe(spark, Q, with_x100: bool = False) -> dict:
     from database_migration_spark.operators.text import winnow_overlap_pairs
 
     res = {}
-    dirs = [("sf0.1", SF01, None), ("x10", OUT, 4 * (REPLICAS // 2))]
+    dirs = [("sf0.1", SF01, None),
+            ("x10", x10(spark, "documents"), 4 * (REPLICAS // 2))]
     if with_x100:
         dirs.append(("x100", OUT100, 4 * (100 // 2)))
     for label, sf_dir, planted_floor in dirs:
@@ -648,7 +666,7 @@ def bm25_compare(spark) -> dict:
     out = {}
     legs = [
         ("sf0.1", SF01, "hash join merge table scan"),
-        ("x10", OUT, "hash0 join0 merge0 table0 scan0"),
+        ("x10", x10(spark, "documents"), "hash0 join0 merge0 table0 scan0"),
     ]
     # r13 (verdict item 3): the W6 inline reshape — one corpus scan,
     # per-term in-array counts, no explode — needs a big-corpus proof;
@@ -751,7 +769,7 @@ def cdc_stream_probe(spark, n_epochs: int = 4) -> dict:
     target = os.path.join(work, "target")
     ckpt = os.path.join(work, "ckpt")
 
-    base = Q.table(spark, OUT, "orders").select(
+    base = Q.table(spark, x10(spark, "orders"), "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_custkey").alias("cust"),
         F.col("o_orderstatus").alias("status"),
@@ -1040,7 +1058,7 @@ def cdc_surgical_probe(spark, partitions: int = 256) -> dict:
 
     src_dir = OUT100 if os.path.exists(
         os.path.join(OUT100, "orders.parquet")
-    ) else OUT
+    ) else x10(spark, "orders")
     base = Q.table(spark, src_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_custkey").alias("cust"),
@@ -1187,7 +1205,8 @@ def validate_fan_probe(spark, pairs: int = 3) -> dict:
     gate = parallel._should_fan
     legs = {}
     sf001 = os.path.join(os.path.dirname(SF01), "sf0.01")
-    for leg, root in (("sf0.01", sf001), ("sf0.1", SF01), ("x10", OUT)):
+    for leg, root in (("sf0.01", sf001), ("sf0.1", SF01),
+                      ("x10", x10(spark, "lineitem"))):
         path = os.path.join(root, "lineitem.parquet")
         left, right = spark.read.parquet(path), spark.read.parquet(path)
 
@@ -1236,24 +1255,6 @@ def main() -> int:
     from database_migration_spark import queries as Q
 
     spark = get_spark(app_name="scale_probe")
-    # completion marker, not directory existence: a generate() that died
-    # mid-write (OUT exists, tables missing/truncated) must not be probed
-    done_marker = os.path.join(OUT, "_GENERATED")
-    if "--regen" in sys.argv or not os.path.exists(done_marker):
-        generate(spark)
-        with open(done_marker, "w") as fh:
-            fh.write("complete\n")
-    else:
-        # tables that joined the x10 set after the first generation
-        missing = tuple(
-            t
-            for t in ("part", "customer", "orders", "supplier", "nation",
-                      "region")
-            if not os.path.exists(os.path.join(OUT, f"{t}.parquet"))
-        )
-        if missing:
-            generate(spark, OUT, REPLICAS, tables=missing)
-
     registry = Q.queries()
     # positional args (non-flag) restrict the probe set — iterate on one
     # operator without paying for the full sweep
@@ -1272,6 +1273,10 @@ def main() -> int:
     probes = [n for n in PROBES if n in picked] if picked else PROBES
     if "--no-queries" in sys.argv:  # e.g. an --ann-only run
         probes = []
+    if probes and "--regen" in sys.argv:
+        generate(spark)
+    elif probes:
+        x10(spark, *TABLES)
     out = {"replicas": REPLICAS, "base_sf": 0.1, "queries": {}}
     for name in probes:
         base = time_query(spark, registry, name, SF01)
@@ -1503,7 +1508,9 @@ def main() -> int:
 
         from database_migration_spark.operators.dedup import minhash_dedup_pairs
 
-        docs = spark.read.parquet(os.path.join(OUT, "documents.parquet"))
+        docs = spark.read.parquet(
+            os.path.join(x10(spark, "documents"), "documents.parquet")
+        )
         boiler = (
             spark.range(2000)
             .select(
@@ -1581,7 +1588,7 @@ def main() -> int:
     if "--ann" in sys.argv:
         out["ann_compare"] = {
             "sf0.1": ann_compare(spark, SF01),
-            "x10": ann_compare(spark, OUT),
+            "x10": ann_compare(spark, x10(spark, "embeddings")),
         }
         # a third decade for recall: buckets get denser as |corpus| grows
         # at fixed bits/centroids, so recall must be re-measured, not
@@ -1660,6 +1667,9 @@ def main() -> int:
             join_cardinality,
         )
 
+        # lineitem, the image corpus and every coherent-subset table
+        x10(spark, "embeddings", "orders", "lineitem", "customer", "part",
+            "supplier", "nation", "region")
         li01 = spark.read.parquet(os.path.join(SF01, "lineitem.parquet"))
         li10 = spark.read.parquet(os.path.join(OUT, "lineitem.parquet"))
         jc = {
@@ -1714,12 +1724,6 @@ def main() -> int:
         # are passthrough dims) — the per-table kept counts below are
         # the non-vacuity guard (a dangling-FK corpus would close over
         # near-empty dims)
-        missing = tuple(
-            t for t in ("nation", "region")
-            if not os.path.exists(os.path.join(OUT, f"{t}.parquet"))
-        )
-        if missing:
-            generate(spark, OUT, REPLICAS, tables=missing)
         sub = {
             "sf0.1_sec": round(
                 cold_thunk(
@@ -1797,8 +1801,7 @@ def main() -> int:
         )
         from database_migration_spark.queries import synth_media
 
-        if not os.path.exists(os.path.join(OUT, "embeddings.parquet")):
-            generate(spark, OUT, REPLICAS, tables=("embeddings",))
+        x10(spark, "embeddings")
         # self-contained study (the --zorder-lifecycle convention): both
         # decades run without --x100, which would otherwise drag the
         # whole main x100 probe sweep along; the x100 embeddings
@@ -1899,6 +1902,7 @@ def main() -> int:
         # constant. Measure the knob: fixed 8 bits at 10x data vs the
         # log2-scaled 11 bits (cell population back at the sf0.1 level).
         sd = Q.QUERIES["semantic_dedup_embeddings"]
+        x10(spark, "embeddings")
         out["semantic_bits_x10"] = {
             "bits8_sec": round(time_thunk(spark, lambda: sd(spark, OUT, bits=8)), 3),
             "bits11_sec": round(time_thunk(spark, lambda: sd(spark, OUT, bits=11)), 3),

@@ -86,8 +86,9 @@ def test_coverage_md_symbols_exist_somewhere():
     phantom = []
     for i in sorted(ids):
         r = subprocess.run(
-            ["grep", "-rq", i, "database_migration_spark", "tests",
-             "scripts", "bench.py", "__spark_entry__.py"],
+            ["grep", "-rqI", "--exclude-dir=__pycache__", i,
+             "database_migration_spark", "tests", "scripts", "bench.py",
+             "__spark_entry__.py"],
             cwd=REPO,
         )
         if r.returncode != 0:

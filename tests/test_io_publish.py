@@ -79,8 +79,8 @@ def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
     scheme-qualified path, naming the table-format alternative, BEFORE any
     write happens."""
     from database_migration_spark.functions.io import (
+        publish_keyed,
         publish_partitions,
-        publish_surgical,
         swap_partition_dirs,
     )
 
@@ -98,7 +98,7 @@ def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
         with pytest.raises(ValueError, match="replace-partitions"):
             publish_partitions(df, bad_path, bad_stage, [0])
         with pytest.raises(ValueError, match="table format"):
-            publish_surgical(
+            publish_keyed(
                 df.drop("_pt"), bad_path, bad_stage, ["k"], 8, [0], True
             )
     # nothing was created for the s3 targets, and no local dir named
@@ -107,7 +107,7 @@ def test_surgical_publish_rejects_non_local_paths(spark, tmp_path):
     assert not any("s3:" in e for e in os.listdir(tmp_path))
     # a windows-drive-looking relative path must NOT be mistaken for a
     # scheme; plain local paths still publish
-    publish_surgical(
+    publish_keyed(
         df.drop("_pt"), local, local + ".stage", ["k"], 8, list(range(8)), True
     )
     assert {(r.k, r.v) for r in spark.read.parquet(local).collect()} == {
